@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * supplier, customer) broadcast — decided by size statistics, not
   * hints, same policy q54 proves in PlanShapeSpec. No query joins
   * lineitem to itself: q101's correlated EXISTS/NOT-EXISTS pair is
-  * re-expressed as ONE per-order aggregate (count + min/max in a single
+  * re-expressed as ONE per-order aggregate (min/max pairs in a single
   * two-phase hash agg; round 17 replaced the countDistinct with the
   * min=max identity, dropping the Expand), so it costs one shuffle
   * on l_orderkey instead of Q21's textbook double self-join — the oracle
@@ -151,10 +151,14 @@ object Analytics {
   // EXISTS (another line, any supplier) + NOT EXISTS (another line,
   // different supplier) double self-join on lineitem; at 100 TB that is
   // two extra shuffles of the biggest table. Re-expressed: one
-  // aggregate per l_orderkey (n_lines, min/max suppkey) keeps it to
-  // a single shuffle, and "sole supplier of a multi-line order" is just
-  // n_lines >= 2 AND min = max — min(l_suppkey) is then THE supplier.
-  // The oracle keeps the correlated form, proving equivalence.
+  // aggregate per l_orderkey (min/max linenumber, min/max suppkey)
+  // keeps it to a single shuffle, and "sole supplier of a multi-line
+  // order" is just min(linenumber) < max(linenumber) AND min = max on
+  // suppkey — min(l_suppkey) is then THE supplier. The line test is on
+  // distinct line numbers, not a row count: the EXISTS asks for a line
+  // with a DIFFERENT l_linenumber, so an order whose only lines repeat
+  // one (l_orderkey, l_linenumber) pair does not qualify. The oracle
+  // keeps the correlated form, proving equivalence.
   def q101(s: SparkSession, dir: String): DataFrame = {
     // round 17: "exactly one distinct supplier" ⟺ min(l_suppkey) =
     // max(l_suppkey) (l_suppkey is non-null in every lineitem row — both
@@ -166,10 +170,11 @@ object Analytics {
     // Output unchanged: n_supp only ever gated the filter.
     val sole = Tables.lineitem(s, dir)
       .groupBy("l_orderkey")
-      .agg(count(lit(1)).as("n_lines"),
+      .agg(min(col("l_linenumber")).as("min_line"),
+           max(col("l_linenumber")).as("max_line"),
            min(col("l_suppkey")).as("the_suppkey"),
            max(col("l_suppkey")).as("max_suppkey"))
-      .filter(col("n_lines") >= 2 &&
+      .filter(col("min_line") < col("max_line") &&
               col("the_suppkey") === col("max_suppkey"))
     sole
       .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "F"),

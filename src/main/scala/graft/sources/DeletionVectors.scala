@@ -1,0 +1,122 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+/** The one reader of deletion-vector (DV) files.
+  *
+  * A DV dir (`tomb_vNNNNNNNN/`, or a `tomb_u…` dir staged before its
+  * commit) holds parquet files of two columns: `__rel` STRING, the last
+  * two segments of a data file's path (`<leaf dir>/<file>`), and `__ri`
+  * BIGINT, a row index inside that file. Readers anti-join their scans
+  * on the pair. Every read of DV files goes through [[read]], which
+  *   - declares that schema, so planning starts no schema-inference job;
+  *   - builds its relation over an explicit file list (cached per DV dir
+  *     by [[SnapshotLog.dvDirFiles]]), so planning starts no listing job
+  *     however many DV dirs a version carries;
+  *   - refuses any file whose footer lacks either column at its type.
+  *     Under a declared schema parquet returns nulls for a missing
+  *     column, and a null `__ri` matches nothing in the anti-join:
+  *     deleted rows would come back silently.
+  */
+private[graft] object DeletionVectors {
+
+  val Schema: StructType = StructType(Seq(
+    StructField("__rel", StringType), StructField("__ri", LongType)))
+
+  /** The rows of the DV dirs `dirs` (names relative to `root`, or
+    * absolute paths for a clone's carried dirs), planned without a job.
+    */
+  def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val rootPath = new Path(root.replaceAll("/+$", ""))
+    val files = dirs.distinct.flatMap(d =>
+      SnapshotLog.dvDirFiles(spark, new Path(rootPath, d)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      location = new ListedFileIndex(files),
+      partitionSchema = StructType(Nil),
+      dataSchema = Schema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty)(spark))
+  }
+
+  /** `base` (a fresh file-source scan, so `_metadata` resolves) with
+    * each row's DV key attached as `__rel` and `__ri`.
+    */
+  def positions(base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, substring_index}
+    base
+      .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
+      .withColumn("__ri", col("_metadata.row_index"))
+  }
+
+  /** [[positions]] of `base` minus the rows the DV dirs `dirs` delete. */
+  def liveRows(spark: SparkSession, root: String, dirs: Seq[String],
+               base: DataFrame): DataFrame =
+    if (dirs.isEmpty) positions(base)
+    else positions(base).join(read(spark, root, dirs), Seq("__rel", "__ri"),
+      "left_anti")
+
+  /** A DV dir's data files (hidden `_`/`.` names skipped, as Spark's own
+    * listing does), each footer checked against [[Schema]].
+    */
+  private[sources] def listChecked(spark: SparkSession, dir: Path): Seq[FileStatus] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = dir.getFileSystem(conf).listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    files.foreach(st => checkFooter(conf, st))
+    files
+  }
+
+  private def checkFooter(conf: org.apache.hadoop.conf.Configuration,
+                          st: FileStatus): Unit = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => LT, Type}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    def refuse(why: String): Nothing = throw new IllegalStateException(
+      s"deletion-vector file ${st.getPath} $why — refusing to read it: " +
+      "under the declared (__rel STRING, __ri BIGINT) schema a missing " +
+      "column reads as null and the rows it deletes would come back")
+    val schema =
+      try {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      } catch { case e: Exception => refuse(s"has no readable parquet footer ($e)") }
+    def expect(name: String, prim: PrimitiveTypeName, ok: LT => Boolean): Unit = {
+      if (!schema.containsField(name)) refuse(s"lacks column $name")
+      val t = schema.getType(schema.getFieldIndex(name))
+      if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED) ||
+          t.asPrimitiveType.getPrimitiveTypeName != prim ||
+          !ok(t.getLogicalTypeAnnotation))
+        refuse(s"stores column $name as $t, not $prim")
+    }
+    expect("__rel", PrimitiveTypeName.BINARY,
+      lt => lt == null || lt.isInstanceOf[LT.StringLogicalTypeAnnotation])
+    expect("__ri", PrimitiveTypeName.INT64, {
+      case null => true
+      case i: LT.IntLogicalTypeAnnotation => i.getBitWidth == 64 && i.isSigned
+      case _ => false
+    })
+  }
+
+  /** A file index over a fixed file list: no listing, no pruning. */
+  private class ListedFileIndex(files: Seq[FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.datasources.PartitionDirectory
+    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+    override def partitionSchema: StructType = StructType(Nil)
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
+        files.toArray))
+  }
+}

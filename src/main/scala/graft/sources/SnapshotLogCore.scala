@@ -590,8 +590,7 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
           val fileHit =
             if (keptFileRels.isEmpty) lit(false)
             else col("__rel").isInCollection(keptFileRels)
-          val surviving = spark.read.parquet(
-            tombs.map(d => new Path(rootPath, d).toString): _*)
+          val surviving = DeletionVectors.read(spark, root, tombs)
             .filter(dirHit || fileHit)
           if (surviving.isEmpty) Nil
           else {
@@ -852,16 +851,8 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
                                  tombs: Seq[String],
                                  base: DataFrame): DataFrame = {
     if (tombs.isEmpty) return base
-    import org.apache.spark.sql.functions.{col, substring_index}
-    val rootPath = new Path(root.replaceAll("/+$", ""))
-    val dv = spark.read.parquet(
-      tombs.map(d => new Path(rootPath, d).toString): _*)
-    val cols = base.columns.toSeq
-    base
-      .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
-      .join(dv, Seq("__rel", "__ri"), "left_anti")
-      .select(cols.map(col(_)): _*)
+    DeletionVectors.liveRows(spark, root, tombs, base)
+      .select(base.columns.toSeq.map(org.apache.spark.sql.functions.col): _*)
   }
 
   /** Reader protocol gate (Delta's minReaderVersion): a manifest written
@@ -1281,9 +1272,9 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
         if (!matchedRel.subsetOf(allRelH)) return None
         if (!candidatesOn(h, allRelH).subsetOf(matchedRel)) return None
         val newTombs = tombDirsOf(spark, root, h).filterNot(tombs.contains)
-        val tombSafe = newTombs.isEmpty || spark.read.parquet(
-            newTombs.map(d => new Path(rootPath, d).toString): _*)
-          .filter(col("__rel").isInCollection(matchedRel)).isEmpty
+        val tombSafe = newTombs.isEmpty ||
+          DeletionVectors.read(spark, root, newTombs)
+            .filter(col("__rel").isInCollection(matchedRel)).isEmpty
         if (tombSafe) Some(h) else None
       }
       val base = rebaseTarget().getOrElse {

@@ -676,7 +676,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
                deleteKeys: DataFrame, keys: Seq[String],
                statsCols: Seq[String] = Nil,
                bloomCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, substring_index}
+    import org.apache.spark.sql.functions.{col, count, lit}
     require(keys.nonEmpty && keys.forall(writes.columns.contains),
       s"mergeMor keys $keys must be columns of the writes frame")
     require(keys.forall(deleteKeys.columns.contains),
@@ -724,14 +724,8 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
           val tombAdd =
             if (!haveDeletes) Nil
             else {
-              val base = prunedBaseScan(spark, root, cur)
-              val basePos = base
-                .withColumn("__rel",
-                  substring_index(col("_metadata.file_path"), "/", -2))
-                .withColumn("__ri", col("_metadata.row_index"))
-              val hits0 = doomedPositions(spark, root, cur, basePos,
+              val hits = doomedPositions(spark, root, cur,
                 b => b.join(dk, keys, "left_semi"))
-              val hits = freshPositions(spark, root, cur, rootPath, hits0)
               writeTombstones(spark, hits, new Path(rootPath, tombDirName(next)))
               Seq(tombDirName(next))
             }
@@ -1297,8 +1291,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
           val fileHit =
             if (keptFileRels.isEmpty) lit(false)
             else col("__rel").isInCollection(keptFileRels)
-          val surviving = spark.read.parquet(
-            tombs.map(d => new Path(rootPath, d).toString): _*)
+          val surviving = DeletionVectors.read(spark, root, tombs)
             .filter(dirHit || fileHit)
           if (surviving.isEmpty) Nil
           else {
@@ -1445,7 +1438,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
     // even when single-file (the collect is O(referenced leafs))
     val tombLeafBases: Set[String] =
       if (tombs.isEmpty) Set.empty
-      else spark.read.parquet(tombs.map(d => new Path(rootPath, d).toString): _*)
+      else DeletionVectors.read(spark, root, tombs)
         .select(substring_index(col("__rel"), "/", 1)).distinct()
         .collect().map(_.getString(0)).toSet
     val (small, kept) =
@@ -1564,8 +1557,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
     val nextTombs =
       if (tombs.isEmpty || kept.isEmpty) Nil
       else {
-        val surviving = spark.read.parquet(
-          tombs.map(d => new Path(rootPath, d).toString): _*)
+        val surviving = DeletionVectors.read(spark, root, tombs)
           .filter(substring_index(col("__rel"), "/", 1).isInCollection(keptBases))
         if (surviving.isEmpty) Nil
         else {
@@ -1638,8 +1630,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
         s"purge at $root: the head carries foreign/clone entries — " +
         "compactChain is the materializing escape")
       // the vector-referenced file set: O(referenced files) driver-side
-      val dvRels: Set[String] = spark.read.parquet(
-          tombs.map(d => new Path(rootPath, d).toString): _*)
+      val dvRels: Set[String] = DeletionVectors.read(spark, root, tombs)
         .select(col("__rel")).distinct()
         .collect().map(_.getString(0)).toSet
       val allFiles: Seq[Path] = filesFromSidecar(spark, root, cur) match {
@@ -1754,8 +1745,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       "scoped purge needs a fully scoped head — run upsertScoped once " +
       "to migrate a mixed table into the scoped layout")
     val tombs = tombDirsOf(spark, root, cur) // nonEmpty: caller checked
-    val tombLeafBases: Set[String] = spark.read.parquet(
-        tombs.map(d => new Path(rootPath, d).toString): _*)
+    val tombLeafBases: Set[String] = DeletionVectors.read(spark, root, tombs)
       .select(substring_index(col("__rel"), "/", 1)).distinct()
       .collect().map(_.getString(0)).toSet
     val (matched, kept) = dirs.partition(d => tombLeafBases.contains(baseName(d)))

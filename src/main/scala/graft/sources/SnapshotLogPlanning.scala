@@ -298,7 +298,10 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
   private type PlanInputs =
     (Option[Seq[org.apache.hadoop.fs.FileStatus]], SpanSource)
   private final case class PlanCacheEntry(
-    ref: java.lang.ref.SoftReference[PlanInputs], weight: Long)
+    ref: java.lang.ref.SoftReference[AnyRef], weight: Long)
+  // the key's last slot tells the two kinds of entry apart
+  private val PlanInputsKind = 0L
+  private val DvDirKind = 1L
   // access-ordered: iteration visits eldest-used first (the evict order)
   private val planCache = new java.util.LinkedHashMap[
     (String, Long, Long, Long), PlanCacheEntry](16, 0.75f, true)
@@ -343,7 +346,7 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
   }
 
   private def planCacheGet(key: (String, Long, Long, Long))
-      : Option[PlanInputs] = planCache.synchronized {
+      : Option[AnyRef] = planCache.synchronized {
     Option(planCache.get(key)).flatMap { e =>
       val v = Option(e.ref.get())
       if (v.isEmpty) { // GC cleared the soft value: drop the shell entry
@@ -354,13 +357,13 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
   }
 
   private def planCachePut(key: (String, Long, Long, Long),
-                           value: PlanInputs, budget: Long): Unit =
+                           value: AnyRef, weight: Long, budget: Long): Unit =
     planCache.synchronized {
       // floor the weight: a pre-listing table's inputs weigh ~0, and
       // zero-weight entries would bypass the budget entirely — an
       // unbounded entry count from a stream touching many versions
       // (review r15). The floor bounds entries at budget/4096.
-      val w = math.max(planEntryWeight(value), 4096L)
+      val w = math.max(weight, 4096L)
       if (w > budget) return // would evict EVERYTHING and still not fit
       Option(planCache.remove(key)).foreach(planCacheBytes -= _.weight)
       planCache.put(key, PlanCacheEntry(
@@ -414,13 +417,38 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
       try readManifest(spark, root, v).hashCode.toLong
       catch { case _: IllegalArgumentException | _: java.io.FileNotFoundException =>
         return planInputsUncached(spark, root, v) }
-    val key = (root.replaceAll("/+$", ""), v, ident, 0L)
+    val key = (root.replaceAll("/+$", ""), v, ident, PlanInputsKind)
     planCacheGet(key) match {
-      case Some(hit) => hit
+      case Some(hit) => hit.asInstanceOf[PlanInputs]
       case None =>
         planInputsMisses += 1
         val fresh = planInputsUncached(spark, root, v)
-        planCachePut(key, fresh, planCacheBudget(spark))
+        planCachePut(key, fresh, planEntryWeight(fresh), planCacheBudget(spark))
+        fresh
+    }
+  }
+
+  /** A deletion-vector dir's footer-checked data files
+    * ([[DeletionVectors.listChecked]]), served from the planning cache
+    * beside the version inputs: a committed DV dir never changes, so
+    * its listing and footer check are paid once, not on every plan.
+    * The key carries the dir's modification time (one stat, no
+    * listing) — a table dropped and re-created at the same path writes
+    * new DV dirs under the old names, whose old listing must not serve.
+    */
+  private[sources] def dvDirFiles(spark: SparkSession, dir: Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    if (spark.conf.get("spark.graft.plan.cache", "true") != "true")
+      return DeletionVectors.listChecked(spark, dir)
+    val key = (dir.toString, fs(spark, dir).getFileStatus(dir).getModificationTime,
+      0L, DvDirKind)
+    planCacheGet(key) match {
+      case Some(hit) => hit.asInstanceOf[Seq[org.apache.hadoop.fs.FileStatus]]
+      case None =>
+        val fresh = DeletionVectors.listChecked(spark, dir)
+        planCachePut(key, fresh,
+          fresh.iterator.map(f => 2L * f.getPath.toString.length + 160L).sum,
+          planCacheBudget(spark))
         fresh
     }
   }

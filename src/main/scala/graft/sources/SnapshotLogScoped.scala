@@ -707,21 +707,6 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     * skip every group that isn't its own. Readers of the whole vector
     * (the batch anti-join) are layout-indifferent.
     */
-  /** `hits` minus every (file, position) the version's EXISTING
-    * deletion vectors already carry — new vectors record only NEWLY
-    * dead rows, so positional change feeds never see a row die twice.
-    */
-  private[sources] def freshPositions(spark: SparkSession, root: String, cur: Long,
-                             rootPath: Path, hits: DataFrame): DataFrame = {
-    val prior = tombDirsOf(spark, root, cur)
-    if (prior.isEmpty) hits
-    else hits.join(
-      spark.read.parquet(prior.map(d => new Path(rootPath, d).toString): _*)
-        .select(org.apache.spark.sql.functions.col("__rel"),
-                org.apache.spark.sql.functions.col("__ri")),
-      Seq("__rel", "__ri"), "left_anti")
-  }
-
   private[sources] def writeTombstones(spark: SparkSession, hits: DataFrame,
                               td: Path): Unit = {
     import org.apache.spark.sql.functions.col
@@ -820,21 +805,31 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     * only the key's latest row would RESURRECT its next-newest shadow,
     * and a raw-scan predicate can match an invisible old shadow while
     * sparing the visible row (deleting rows no reader ever saw).
-    * `basePos` is the raw scan with `__rel`/`__ri` attached; `select`
-    * must tolerate either frame (filters and key semi-joins do).
+    * `select` receives the raw scan with `__rel`/`__ri` attached, or
+    * the visible table, and must tolerate either frame (filters and key
+    * semi-joins do). Positions the version's EXISTING deletion vectors
+    * already carry are excluded: new vectors record only NEWLY dead
+    * rows, so positional change feeds never see a row die twice (a
+    * re-deleted key's rows may re-match). Planning the result starts no
+    * job; the caller's vector write runs the one pruned scan.
     */
   private[sources] def doomedPositions(spark: SparkSession, root: String, cur: Long,
-                              basePos: DataFrame,
                               select: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
+    val basePos = DeletionVectors.positions(prunedBaseScan(spark, root, cur))
     val mk = morKeysOf(spark, root, cur)
-    if (mk.isEmpty) select(basePos).select(col("__rel"), col("__ri"))
-    else {
-      val doomedKeys = select(readVersion(spark, root, cur))
-        .select(mk.map(col(_)): _*).distinct()
-      basePos.join(doomedKeys, mk, "left_semi")
-        .select(col("__rel"), col("__ri"))
-    }
+    val doomed =
+      if (mk.isEmpty) select(basePos).select(col("__rel"), col("__ri"))
+      else {
+        val doomedKeys = select(readVersion(spark, root, cur))
+          .select(mk.map(col(_)): _*).distinct()
+        basePos.join(doomedKeys, mk, "left_semi")
+          .select(col("__rel"), col("__ri"))
+      }
+    val prior = tombDirsOf(spark, root, cur)
+    if (prior.isEmpty) doomed
+    else doomed.join(DeletionVectors.read(spark, root, prior),
+      Seq("__rel", "__ri"), "left_anti")
   }
 
   /** Merge-on-read DELETE (deletion vectors): record the (file, row
@@ -850,7 +845,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     */
   def tombstoneDelete(spark: SparkSession, root: String,
                       tombstones: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.functions.col
     require(keys.nonEmpty && keys.forall(tombstones.columns.contains),
       s"keys $keys must be columns of the tombstone frame")
     withClaim(spark, root) { f =>
@@ -859,25 +854,16 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         throw new IllegalStateException(s"no committed version at $root"))
       val next = cur + 1L
       val rootPath = new Path(root.replaceAll("/+$", ""))
-      // pin an evolved lineage's schema so mixed pre/post-evolution dirs
-      // don't play schema roulette under the position scan
-      // file-manifest scan: schema declared, zero listing when the
-      // sidecar is complete (prunedBaseScan); raw positions, no DV/MoR
-      val base = prunedBaseScan(spark, root, cur)
-      require(keys.forall(base.columns.contains),
-        s"keys $keys must be columns of the table")
-      // one key-pruned scan finds positions. A re-deleted key's rows may
-      // re-match — exclude positions the prior vectors already carry
-      // (round 9: a duplicate would re-emit the row as a SECOND delete
-      // through the CDC surfaces; it was also dead weight the next
-      // compaction had to fold)
-      val basePos = base
-        .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__ri", col("_metadata.row_index"))
-      val hits0 = doomedPositions(spark, root, cur, basePos, b =>
+      // one key-pruned scan (file-manifest, schema declared) finds the
+      // positions, minus those prior vectors carry (round 9: a duplicate
+      // would re-emit the row as a SECOND delete through the CDC
+      // surfaces; it was also dead weight the next compaction had to fold)
+      val hits = doomedPositions(spark, root, cur, { b =>
+        require(keys.forall(b.columns.contains),
+          s"keys $keys must be columns of the table")
         b.join(tombstones.select(keys.map(col(_)): _*).distinct(),
-          keys, "left_semi"))
-      val hits = freshPositions(spark, root, cur, rootPath, hits0)
+          keys, "left_semi")
+      })
       val td = new Path(rootPath, tombDirName(next))
       writeTombstones(spark, hits, td)
       // the data-file set is untouched, so the parent's sidecar carries
@@ -909,23 +895,13 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     */
   def tombstoneDeleteWhere(spark: SparkSession, root: String,
                            mkCond: DataFrame => org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, substring_index}
     withClaim(spark, root) { f =>
       recoverOrphans(spark, root)
       val cur = currentVersion(spark, root).getOrElse(
         throw new IllegalStateException(s"no committed version at $root"))
       val next = cur + 1L
       val rootPath = new Path(root.replaceAll("/+$", ""))
-      // file-manifest scan: schema declared, zero listing when the
-      // sidecar is complete (prunedBaseScan); raw positions, no DV/MoR
-      val base = prunedBaseScan(spark, root, cur)
-      val basePos = base
-        .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__ri", col("_metadata.row_index"))
-      val hits0 = doomedPositions(spark, root, cur, basePos,
-        b => b.filter(mkCond(b)))
-      // exclude already-tombstoned positions: see tombstoneDelete
-      val hits = freshPositions(spark, root, cur, rootPath, hits0)
+      val hits = doomedPositions(spark, root, cur, b => b.filter(mkCond(b)))
       val td = new Path(rootPath, tombDirName(next))
       writeTombstones(spark, hits, td)
       val carry = sidecarCarry(spark, root, cur)
@@ -990,21 +966,15 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     */
   private[sources] def stageTombstoneCore(spark: SparkSession, root: String)
       (select: DataFrame => DataFrame): StagedDelete = {
-    import org.apache.spark.sql.functions.{col, substring_index}
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     val rootPath = new Path(root.replaceAll("/+$", ""))
-    val base = prunedBaseScan(spark, root, cur)
-    val basePos = base
-      .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
-    val hits0 = doomedPositions(spark, root, cur, basePos, select)
-    val hits = freshPositions(spark, root, cur, rootPath, hits0)
+    val hits = doomedPositions(spark, root, cur, select)
     val staging = "tomb_u" + java.util.UUID.randomUUID.toString.replace("-", "")
     writeTombstones(spark, hits, new Path(rootPath, staging))
     // O(touched files): the rel keys this vector references — the
     // publish-side disjointness check needs exactly this set
-    val touched = spark.read.parquet(new Path(rootPath, staging).toString)
+    val touched = DeletionVectors.read(spark, root, Seq(staging))
       .select("__rel").distinct().collect().map(_.getString(0)).toSet
     StagedDelete(cur, staging, touched)
   }
@@ -1045,7 +1015,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     * cleans up and throws.
     */
   private[sources] def validateDisjointRebase(spark: SparkSession, root: String,
-                                     rootPath: Path, base: Long, head: Long,
+                                     base: Long, head: Long,
                                      touchedRels: Set[String],
                                      abort: String => Nothing): Unit = {
     val baseDirsSet = dirsOf(spark, root, base).toSet
@@ -1059,8 +1029,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     val newTombs = tombDirsOf(spark, root, head).drop(baseTombs.size)
     if (newTombs.nonEmpty) {
       import org.apache.spark.sql.functions.col
-      val overlapping = spark.read.parquet(
-          newTombs.map(d => new Path(rootPath, d).toString): _*)
+      val overlapping = DeletionVectors.read(spark, root, newTombs)
         .select("__rel").distinct()
         .filter(col("__rel").isInCollection(touchedRels))
         .limit(1).count() > 0
@@ -1086,7 +1055,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       val head = currentVersion(spark, root).getOrElse(
         abort("table has no committed version"))
       val next = head + 1L
-      validateDisjointRebase(spark, root, rootPath, staged.base, head,
+      validateDisjointRebase(spark, root, staged.base, head,
         staged.touchedRels, abort)
       if (!f.exists(stagingPath))
         abort("staging dir missing (vacuumed or already published)")
@@ -1138,7 +1107,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       mkCond: DataFrame => org.apache.spark.sql.Column,
       mkAssign: DataFrame => Map[String, org.apache.spark.sql.Column])
       : StagedUpdate = {
-    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.functions.col
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     require(morKeysOf(spark, root, cur).isEmpty,
@@ -1152,15 +1121,8 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
     require(assignments.keys.forall(base.columns.contains),
       s"SET columns ${assignments.keys} must be columns of the table")
-    val tombs = tombDirsOf(spark, root, cur)
-    val withPos = base
-      .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
-    val alive =
-      if (tombs.isEmpty) withPos
-      else withPos.join(
-        spark.read.parquet(tombs.map(d => new Path(rootPath, d).toString): _*),
-        Seq("__rel", "__ri"), "left_anti")
+    val alive = DeletionVectors.liveRows(spark, root,
+      tombDirsOf(spark, root, cur), base)
     val matched = alive.filter(mkCond(base)).persist()
     try {
       if (matched.isEmpty)
@@ -1199,8 +1161,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         schemaOf(spark, root, cur).map(toPhysicalDf(rewrites, _))
           .getOrElse(rewrites).write.mode("overwrite")
           .parquet(new Path(rootPath, dataStaging).toString)
-        val touched = spark.read
-          .parquet(new Path(rootPath, tombStaging).toString)
+        val touched = DeletionVectors.read(spark, root, Seq(tombStaging))
           .select("__rel").distinct().collect().map(_.getString(0)).toSet
         StagedUpdate(cur, tombStaging, dataStaging, touched, noMatch = false,
           obs = obs, constraintsFp = gateFp)
@@ -1235,7 +1196,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       if (Constraints.fingerprint(spark, root) != staged.constraintsFp)
         abort("table constraints changed while the update was staging")
       val next = head + 1L
-      validateDisjointRebase(spark, root, rootPath, staged.base, head,
+      validateDisjointRebase(spark, root, staged.base, head,
         staged.touchedRels, abort)
       val tombSrc = new Path(rootPath, staged.tombStaging)
       val dataSrc = new Path(rootPath, staged.dataStaging)
@@ -1309,7 +1270,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
   def updateWhere(spark: SparkSession, root: String,
                   mkCond: DataFrame => org.apache.spark.sql.Column,
                   mkAssign: DataFrame => Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.functions.col
     withClaim(spark, root) { f =>
       recoverOrphans(spark, root)
       val cur = currentVersion(spark, root).getOrElse(
@@ -1334,14 +1295,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       // a deletion vector must not match (they would resurrect as
       // updated copies), so the current vectors apply first
       val tombs = tombDirsOf(spark, root, cur)
-      val withPos = base
-        .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__ri", col("_metadata.row_index"))
-      val alive =
-        if (tombs.isEmpty) withPos
-        else withPos.join(
-          spark.read.parquet(tombs.map(d => new Path(rootPath, d).toString): _*),
-          Seq("__rel", "__ri"), "left_anti")
+      val alive = DeletionVectors.liveRows(spark, root, tombs, base)
       val matched = alive.filter(mkCond(base)).persist()
       try {
         if (matched.isEmpty) cur
@@ -1430,7 +1384,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     */
   def replaceWhere(spark: SparkSession, root: String, batch: DataFrame,
                    mkCond: DataFrame => org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, not, substring_index}
+    import org.apache.spark.sql.functions.{col, not}
     withClaim(spark, root) { f =>
       recoverOrphans(spark, root)
       val cur = currentVersion(spark, root).getOrElse(
@@ -1470,14 +1424,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       // updateWhere probe, minus the payload
       val base = prunedBaseScan(spark, root, cur)
       val tombs = tombDirsOf(spark, root, cur)
-      val withPos = base
-        .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-        .withColumn("__ri", col("_metadata.row_index"))
-      val alive =
-        if (tombs.isEmpty) withPos
-        else withPos.join(
-          spark.read.parquet(tombs.map(d => new Path(rootPath, d).toString): _*),
-          Seq("__rel", "__ri"), "left_anti")
+      val alive = DeletionVectors.liveRows(spark, root, tombs, base)
       val hits = alive.filter(mkCond(base))
         .select(col("__rel"), col("__ri")).persist()
       try {

@@ -223,8 +223,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
   private[sources] def scanWithRids(spark: SparkSession, root: String, version: Long,
                            paths: Seq[String], tombs: Seq[String],
                            keepPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error,
-      substring_index, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
     val pinned = schemaOf(spark, root, version)
     val logicalFields = pinned.map(st =>
         st.fields.filterNot(isDropped).toSeq.map(fl => (fl.name, physName(fl))))
@@ -238,9 +237,8 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
         .asInstanceOf[org.apache.spark.sql.types.StructType].fields :+
         org.apache.spark.sql.types.StructField(RowIdCol,
           org.apache.spark.sql.types.LongType, nullable = true))
-    val scan = spark.read.schema(declared).parquet(paths: _*)
-      .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
+    val scan = DeletionVectors.positions(
+      spark.read.schema(declared).parquet(paths: _*))
     // the (rel → base) map is O(files) tiny rows — BROADCAST it, or the
     // planner may shuffle the whole data scan to sort-merge against it
     // (measured 7× on a 9M-row read before the hint)
@@ -254,12 +252,8 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       .otherwise(rid)
     val vis =
       if (tombs.isEmpty) withBase
-      else {
-        val rootPath = new Path(root.replaceAll("/+$", ""))
-        withBase.join(spark.read.parquet(
-            tombs.map(d => new Path(rootPath, d).toString): _*),
-          Seq("__rel", "__ri"), "left_anti")
-      }
+      else withBase.join(DeletionVectors.read(spark, root, tombs),
+        Seq("__rel", "__ri"), "left_anti")
     val posCols = if (keepPos) Seq(col("__rel"), col("__ri")) else Nil
     vis.select(logicalFields.map { case (lname, pname) =>
       col(pname).as(lname) } ++ Seq(guarded.as(RowIdCol)) ++ posCols: _*)
@@ -471,11 +465,9 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
     val fromTombs = tombDirsOf(spark, root, fromV).toSet
     val toTombs = tombDirsOf(spark, root, toV).toSet
     val tombDelta = (fromTombs diff toTombs) ++ (toTombs diff fromTombs)
-    val rootPath = new Path(root.replaceAll("/+$", ""))
     val dirtyByVector: Set[String] =
       if (tombDelta.isEmpty) Set.empty
-      else spark.read.parquet(
-          tombDelta.toSeq.map(d => new Path(rootPath, d).toString): _*)
+      else DeletionVectors.read(spark, root, tombDelta.toSeq)
         .select("__rel").distinct().collect().map(_.getString(0)).toSet
     val dirty = fromFiles.keySet.diff(toFiles.keySet) ++
       toFiles.keySet.diff(fromFiles.keySet) ++ dirtyByVector
@@ -874,13 +866,10 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
         val prevTombs = tombDirsOf(spark, root, v - 1)
         val newTombs = tombDirsOf(spark, root, v).drop(prevTombs.size)
         if (newTombs.isEmpty) return None
-        val newPos = spark.read.parquet(newTombs.map(d => s"$rootS/$d"): _*)
-          .select(col("__rel"), col("__ri")).distinct()
+        val newPos = DeletionVectors.read(spark, root, newTombs).distinct()
         val fresh =
           if (prevTombs.isEmpty) newPos
-          else newPos.join(
-            spark.read.parquet(prevTombs.map(d => s"$rootS/$d"): _*)
-              .select(col("__rel"), col("__ri")),
+          else newPos.join(DeletionVectors.read(spark, root, prevTombs),
             Seq("__rel", "__ri"), "left_anti")
         val rels = fresh.select("__rel").distinct().collect().map(_.getString(0))
         val baseToDir = dirsOf(spark, root, v - 1).map { d =>
@@ -904,9 +893,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
           case Some(st) => spark.read.schema(physicalSchema(st)).parquet(files: _*)
           case None => spark.read.parquet(files: _*)
         }
-        val keyed = raw
-          .withColumn("__rel", substring_index(col("_metadata.file_path"), "/", -2))
-          .withColumn("__ri", col("_metadata.row_index"))
+        val keyed = DeletionVectors.positions(raw)
           .join(fresh, Seq("__rel", "__ri"), "left_semi")
           .drop("__rel", "__ri")
         val logical = pinned.map(st => fromPhysicalSelect(keyed, st)).getOrElse(keyed)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.SnapshotLog
+import graft.sources.{DeletionVectors, SnapshotLog}
 
 /** Structured-Streaming TAIL of a snapshot-log table — the "stream a
   * lakehouse table" verb (Delta's streaming source shape):
@@ -453,8 +453,7 @@ private[streaming] class GraftTailStream(root: String, schema: StructType,
       if (endTombs.isEmpty) Map.empty
       else {
         import org.apache.spark.sql.functions.{col, input_file_name}
-        spark.read.parquet(
-            endTombs.map(t => new Path(rootPath, t).toString): _*)
+        DeletionVectors.read(spark, root, endTombs)
           .select(col("__rel"), input_file_name().as("tf"))
           .distinct().collect()
           .groupBy(_.getString(0))
@@ -978,8 +977,7 @@ private[streaming] class GraftChangesStream(root: String, dataSchema: StructType
         // position on the driver)
         import org.apache.spark.sql.functions.{col, input_file_name}
         val relFiles: Map[String, Array[String]] =
-          spark.read.parquet(
-              newTombs.map(t => new Path(rootPath, t).toString): _*)
+          DeletionVectors.read(spark, root, newTombs)
             .select(col("__rel"), input_file_name().as("tf"))
             .distinct().collect()
             .groupBy(_.getString(0))
