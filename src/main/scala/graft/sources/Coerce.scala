@@ -52,23 +52,36 @@ object Coerce {
     raw.select(cols: _*)
   }
 
-  /** Good/bad split with audit: a row is bad iff some rule column was
-    * NON-null before coercion but null after (i.e. the cast failed, not a
-    * genuinely missing value). `bad` keeps the ORIGINAL raw values plus a
-    * `bad_columns` array naming the offenders — the forensic output the
-    * reference prints to its load logs.
+  /** Name of the audit column [[audit]] adds. */
+  val AuditCol = "bad_columns"
+
+  /** True on an audited row that failed coercion. */
+  val isBad: Column = size(col(AuditCol)) > 0
+
+  /** `raw` plus the audit column: an array naming every rule column that
+    * was NON-null before coercion but null after (the cast failed, not a
+    * genuinely missing value). Empty on a good row. The one definition of
+    * "bad row" shared by [[coerceWithAudit]] and [[Rebuild]].
     */
-  def coerceWithAudit(raw: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) = {
-    val coerced = coerce(raw, rules)
+  def audit(raw: DataFrame, rules: Seq[Rule]): DataFrame = {
     val failFlags = rules.map { r =>
       val cleaned = applyCleans(col(r.column), r.cleans)
       when(col(r.column).isNotNull && cleaned.try_cast(r.castTo).isNull,
         lit(r.column))
     }
-    val withAudit = raw.withColumn("bad_columns",
-      array_compact(array(failFlags: _*)))
-    val bad = withAudit.filter(size(col("bad_columns")) > 0)
-    val goodKeys = withAudit.filter(size(col("bad_columns")) === 0).drop("bad_columns")
-    (coerce(goodKeys, rules), bad)
+    raw.withColumn(AuditCol, array_compact(array(failFlags: _*)))
+  }
+
+  /** The good rows of an [[audit]]ed frame, cleaned and coerced. */
+  def good(audited: DataFrame, rules: Seq[Rule]): DataFrame =
+    coerce(audited.filter(!isBad).drop(AuditCol), rules)
+
+  /** Good/bad split with audit. `bad` keeps the ORIGINAL raw values plus
+    * the `bad_columns` array naming the offenders — the forensic output
+    * the reference prints to its load logs.
+    */
+  def coerceWithAudit(raw: DataFrame, rules: Seq[Rule]): (DataFrame, DataFrame) = {
+    val audited = audit(raw, rules)
+    (good(audited, rules), audited.filter(isBad))
   }
 }

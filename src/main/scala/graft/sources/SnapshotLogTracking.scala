@@ -1415,14 +1415,15 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
           b.result()
         }
         // a commit may legitimately write ZERO files (a purge whose
-        // matched leafs all emptied) — nothing to span, and the schema
-        // probe below would fail on the fileless dir
+        // matched leafs all emptied) — nothing to span, and no footer
+        // to read the schema from
         if (paths.isEmpty) None
         else {
-          // validate requested columns against the SPARK schema
-          // (footer-only read — parquet datasource schema resolution
-          // reads no row data)
-          val fields = spark.read.parquet(dd.toString).schema.fields
+          // validate requested columns against the SPARK schema, read on
+          // the driver from the first file's footer (one commit's files
+          // share one schema)
+          val fields = org.apache.spark.sql.graftshim.ClassicShim
+            .parquetFooterSchema(spark, paths.head).fields
             .map(fl => fl.name -> fl.dataType).toMap
           footerSpanRdd(spark, paths, cols, fields)
         }

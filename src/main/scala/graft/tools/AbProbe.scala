@@ -293,7 +293,7 @@ object AbProbe {
       val t0 = System.nanoTime()
       f(spark).count()
       val w = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(150) // listener bus drain
+      org.apache.spark.sql.graftshim.Bus.drain(spark.sparkContext)
       Run(w, jobs, tasks, cpuMs / 1e3)
     }
     // warm both

@@ -84,8 +84,7 @@ object QueryProbe {
         df.count()
         val wall = (System.nanoTime() - t0) / 1e9
         if (verbose) println(f"    [plan $planS%6.3f s]")
-        // listener events are async; give the bus a beat
-        Thread.sleep(150)
+        org.apache.spark.sql.graftshim.Bus.drain(spark.sparkContext)
         val maxStage = synchronized {
           stageWall.values.collect { case (s, e) if e > 0 => (e - s) / 1e9 }
             .foldLeft(0.0)(math.max)

@@ -3,13 +3,19 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Minimal bridge into Spark's `private[sql]` classic internals, the
   * standard extension-library technique (a lakehouse format or query
-  * extension needs exactly these two hooks): materialize a Dataset from
-  * a composed logical plan, and wrap a Catalyst expression as a public
-  * Column. Kept to one tiny object so the internal surface we touch is
-  * auditable at a glance.
+  * extension needs exactly these hooks): materialize a Dataset from a
+  * composed logical plan, wrap a Catalyst expression as a public Column,
+  * and read a parquet footer's schema the way the reader does. Kept to
+  * one tiny object so the internal surface we touch is auditable at a
+  * glance.
   */
 object ClassicShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -47,5 +53,19 @@ object ClassicShim {
     classic.Dataset.ofRows(ds.sparkSession,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(
         ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
+
+  /** The schema `spark.read.parquet` infers from one file without schema
+    * merging — Spark's own footer conversion under the session's conf,
+    * all-nullable as the relation exposes it — read on the driver, so
+    * no inference job starts.
+    */
+  def parquetFooterSchema(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(p, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
   }
 }
