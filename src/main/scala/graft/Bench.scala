@@ -93,7 +93,7 @@ object Bench {
     // them. MULTI-PROBE (8 bits × 5 tables × 4 lowest-margin bit
     // flips): recall 9-10/10 on the near-uniform fixtures — the
     // adversarial LSH regime — at 83% of the single-probe candidate
-    // budget (measured in EmbedOpsSpec; swept in tools/LshProbeTune).
+    // budget (measured in EmbedOpsSpec).
     "x32_top_pairs_lsh" -> ((s, dir) =>
       graft.engine.EmbedOps.topCosinePairsLshMultiProbe(
         graft.engine.Tables.embeddings(s, dir), k = 10)),

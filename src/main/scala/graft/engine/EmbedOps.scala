@@ -4,19 +4,26 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
-/** Embedding-vector operators (SURVEY.md §2.9 llm_embed_norm + the task
-  * brief's similarity-search scale path): vector hygiene (norm, normalize,
-  * centroid per label) and approximate nearest neighbour via random-
-  * hyperplane LSH bucketing over the codegen'd vec_dot kernel.
+/** Embedding-vector operators (SURVEY.md §2.9 llm_embed_norm). Four
+  * groups, all over the codegen'd vec_* kernels:
+  *   - vector hygiene: norm, normalize, centroid per label, int8
+  *     quantization;
+  *   - LSH pair generation: random-hyperplane bucketing (single- or
+  *     multi-probe) feeding ONE candidate-pair pipeline, used by the x32
+  *     and x41 bench twins;
+  *   - the quantizer training and encoding primitives the persisted
+  *     [[AnnIndex]] calls (sampled IVF / IVF-PQ builds, cell assignment,
+  *     PQ encode). Per-query ANN search is [[AnnIndex.knn]];
+  *   - reference implementations tests compare against: the brute-force
+  *     oracle and the in-session IVF / IVF-PQ queries.
   *
   * 100 TB notes: norms/normalization are per-row scan-speed work. Centroids
   * are one shuffle on (label, dim) — the posexplode keeps partial aggs
   * map-side combinable. Brute-force kNN against a single query vector is a
   * broadcast of the query + a global top-k (TakeOrderedAndProject) — linear
-  * scan, no shuffle of the corpus. The LSH path buckets the corpus once
-  * (signature = sign bits against fixed pseudo-random hyperplanes) and then
-  * probes only matching buckets: corpus-side cost drops from O(n) per query
-  * to O(n / 2^bits) expected, at measured recall (see EmbedOpsSpec).
+  * scan, no shuffle of the corpus. LSH pair generation buckets the corpus
+  * once (signature = sign bits against fixed pseudo-random hyperplanes)
+  * and joins only within buckets.
   */
 object EmbedOps {
 
@@ -49,9 +56,6 @@ object EmbedOps {
       .withColumn("centroid", expr("transform(pairs, p -> p.mean_v)"))
       .select(col(labelCol), col("centroid"))
 
-  /** Brute-force top-k cosine neighbours of one query vector: broadcast the
-    * query as a literal, score with vec_dot, global top-k.
-    */
   /** Typed float-array literal (NaN/Infinity-safe — string-interpolating
     * vector values into SQL would not parse non-finite floats). A single
     * Literal node, NOT array(lit, lit, …): with dim×bits×tables plane
@@ -61,6 +65,10 @@ object EmbedOps {
   private def floatArrayLit(vs: Seq[Float]): Column =
     typedlit[Seq[Float]](vs)
 
+  /** Brute-force top-k cosine neighbours of one query vector: broadcast the
+    * query as a literal, score with vec_dot, global top-k. The exact
+    * oracle every ANN recall figure is measured against.
+    */
   def knnBruteForce(corpus: DataFrame, query: Seq[Float], k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     VectorFunctions.register(corpus.sparkSession)
@@ -109,7 +117,26 @@ object EmbedOps {
     */
   def withLshBuckets(df: DataFrame, bits: Int = 4, tables: Int = 8,
                      vecCol: String = "embedding",
-                     dim: Option[Int] = None): DataFrame = {
+                     dim: Option[Int] = None): DataFrame =
+    withLshColumn(df, bits, tables, None, vecCol, dim, "withLshBuckets")
+
+  /** Multi-probe bucketing: like [[withLshBuckets]] but each table emits
+    * the base bucket PLUS `nprobe` lowest-margin bit-flip buckets (the
+    * codegen'd `vec_lsh_probe` kernel). The `buckets` array has
+    * `tables*(1+nprobe)` entries laid out per-table.
+    */
+  def withLshProbes(df: DataFrame, bits: Int, tables: Int, nprobe: Int,
+                    vecCol: String = "embedding",
+                    dim: Option[Int] = None): DataFrame =
+    withLshColumn(df, bits, tables, Some(nprobe), vecCol, dim, "withLshProbes")
+
+  /** The one body behind [[withLshBuckets]] (`nprobe` None: `vec_lsh`)
+    * and [[withLshProbes]] (`vec_lsh_probe`); `caller` names the public
+    * entry point in the mixed-width error.
+    */
+  private def withLshColumn(df: DataFrame, bits: Int, tables: Int,
+                            nprobe: Option[Int], vecCol: String,
+                            dim: Option[Int], caller: String): DataFrame = {
     VectorFunctions.register(df.sparkSession)
     // resolve the expected width: explicit param, or a one-non-null-row
     // probe (a null first vector would make size() null and NPE the probe)
@@ -123,24 +150,30 @@ object EmbedOps {
         // empty or all-null corpus: null vectors keep NULL buckets (same
         // semantics as the normal path — a non-null zeros array here would
         // make unmatched-able null rows collide into every candidate pair)
+        val width = tables * (1 + nprobe.getOrElse(0))
         df.withColumn("buckets",
-          when(col(vecCol).isNotNull, array((0 until tables).map(_ => lit(0)): _*))
+          when(col(vecCol).isNotNull, array((0 until width).map(_ => lit(0)): _*))
             .otherwise(lit(null).cast("array<int>")))
       case Some(d) =>
-        // plane (t,p) occupies [((t*bits)+p)*dim, +dim) — the layout vec_lsh reads
+        // plane (t,p) occupies [((t*bits)+p)*dim, +dim) — the layout both kernels read
         val planesFlat = floatArrayLit(
           for (t <- 0 until tables; p <- 0 until bits; dd <- 0 until d)
             yield planeSign(t, p, dd))
         val dimMsg = concat(
-          lit(s"withLshBuckets: vector of dimension "),
+          lit(s"$caller: vector of dimension "),
           size(col(vecCol)).cast("string"),
           lit(s" in a corpus of expected dimension $d — mixed-width " +
             "embeddings are malformed; fix the corpus or bucket per width"))
+        val kernel = nprobe match {
+          case None => call_function("vec_lsh", col(vecCol), planesFlat,
+            lit(bits), lit(tables))
+          case Some(np) => call_function("vec_lsh_probe", col(vecCol), planesFlat,
+            lit(bits), lit(tables), lit(np))
+        }
         df.withColumn("buckets",
           when(col(vecCol).isNull, lit(null).cast("array<int>"))
             .when(size(col(vecCol)) =!= d, raise_error(dimMsg))
-            .otherwise(call_function("vec_lsh", col(vecCol), planesFlat,
-              lit(bits), lit(tables))))
+            .otherwise(kernel))
     }
   }
 
@@ -155,18 +188,24 @@ object EmbedOps {
                          bits: Int = 4, tables: Int = 8,
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame =
-    scoredLshPairs(corpus, bits, tables, idCol, vecCol)
+    scoredLshPairs(corpus, bits, tables, 0, idCol, vecCol)
       .filter(col("cosine") >= threshold)
       .orderBy("id_a", "id_b")
 
-  /** Shared LSH pair pipeline: bucket → candidate ids (deduped BEFORE
+  /** The LSH pair pipeline: bucket → candidate ids (deduped BEFORE
     * scoring — a pair colliding in m tables would otherwise be scored m
     * times and ship m copies of both vectors through the join) → exact
     * vec_dot score. Callers apply their own selection (threshold filter
     * or global top-k).
+    *
+    * `nprobe` = 0 buckets with `vec_lsh`, one bucket per table. Above 0,
+    * `vec_lsh_probe` adds the `nprobe` lowest-margin bit flips per table
+    * and entries join within a table across base AND probe buckets, so a
+    * pair whose signatures differ in one low-margin bit still collides.
     */
   private def scoredLshPairs(corpus0: DataFrame, bits: Int, tables: Int,
-                             idCol: String, vecCol: String): DataFrame = {
+                             nprobe: Int, idCol: String,
+                             vecCol: String): DataFrame = {
     VectorFunctions.register(corpus0.sparkSession)
     // round 17: vec_lsh bucketing and the two vec_dot verify joins all run
     // in this frame's stages — fan a single-split scan out once
@@ -180,110 +219,20 @@ object EmbedOps {
     // round 18 (cont.): the pin sits BEFORE the posexplode — exploding
     // the computed `buckets` attribute made InferFiltersFromGenerate
     // push `size(buckets)>0 AND isnotnull(buckets)` below the projection,
-    // re-evaluating the ENTIRE vec_lsh kernel per row (the before-plan
+    // re-evaluating the ENTIRE hashing kernel per row (the before-plan
     // shows 4 kernel evaluations: 2 sides × inferred-filter + project).
-    // Pinned as the compact (id, buckets[tables]) array frame, the
-    // kernel runs ONCE per vector and the inferred filter lands on a
-    // STORED column; the two per-side explodes are cheap array unpacks.
-    val bucketed = withLshBuckets(corpus, bits, tables, vecCol)
-      .localCheckpoint(eager = false)
-    val entries = bucketed
-      .select(col(idCol), posexplode(col("buckets")).as(Seq("table", "bucket")))
-    val a = entries.select(col("table"), col("bucket"), col(idCol).as("id_a"))
-    val b = entries.select(col("table").as("table_b"), col("bucket").as("bucket_b"),
-      col(idCol).as("id_b"))
-    val candidates = a
-      .join(b, col("table") === col("table_b") && col("bucket") === col("bucket_b") &&
-               col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    candidates
-      .join(corpus.select(col(idCol).as("id_a"), col(vecCol).as("vec_a")), "id_a")
-      .join(corpus.select(col(idCol).as("id_b"), col(vecCol).as("vec_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        expr("vec_dot(vec_a, vec_b)").as("cosine"))
-  }
-
-  /** Scale twin of q32's global top-k most-similar pairs: LSH bucket
-    * candidates replace the O(n²) cross join, exact vec_dot ranks them,
-    * TakeOrderedAndProject keeps k. A top pair is missed only if it
-    * collides in NO table — probability (1−p^bits)^tables with
-    * p = 1−θ/π, so recall tracks how SIMILAR the top pairs are: near-dup
-    * corpora (x41's 0.9+ operating point) retrieve exactly; the fixture
-    * embeddings are near-uniform (global top-10 cosines only ≈0.44–0.48,
-    * per-pair miss ≈19% at 4 bits × 8 tables) — the adversarial case for
-    * hyperplane LSH — and still measure 8/10 recall (EmbedOpsSpec pins
-    * the deterministic-plane value at both fixture SFs). Bench twin, no
-    * oracle (SURVEY §2.0.10); rounding and tie order mirror q32.
-    */
-  def topCosinePairsLsh(corpus: DataFrame, k: Int, bits: Int = 4,
-                        tables: Int = 8, idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame =
-    scoredLshPairs(corpus, bits, tables, idCol, vecCol)
-      .withColumn("cosine", round(col("cosine"), 4))
-      .orderBy(desc("cosine"), col("id_a"), col("id_b"))
-      .limit(k)
-
-  /** Multi-probe bucketing: like [[withLshBuckets]] but each table emits
-    * the base bucket PLUS `nprobe` lowest-margin bit-flip buckets (the
-    * codegen'd `vec_lsh_probe` kernel). The `buckets` array has
-    * `tables*(1+nprobe)` entries laid out per-table.
-    */
-  def withLshProbes(df: DataFrame, bits: Int, tables: Int, nprobe: Int,
-                    vecCol: String = "embedding",
-                    dim: Option[Int] = None): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
-    val expected = dim.orElse {
-      val firstDim = df.filter(col(vecCol).isNotNull)
-        .select(size(col(vecCol))).take(1)
-      firstDim.headOption.map(_.getInt(0))
-    }
-    expected match {
-      case None =>
-        df.withColumn("buckets",
-          when(col(vecCol).isNotNull,
-            array((0 until tables * (1 + nprobe)).map(_ => lit(0)): _*))
-            .otherwise(lit(null).cast("array<int>")))
-      case Some(d) =>
-        val planesFlat = floatArrayLit(
-          for (t <- 0 until tables; p <- 0 until bits; dd <- 0 until d)
-            yield planeSign(t, p, dd))
-        val dimMsg = concat(
-          lit(s"withLshProbes: vector of dimension "),
-          size(col(vecCol)).cast("string"),
-          lit(s" in a corpus of expected dimension $d — mixed-width " +
-            "embeddings are malformed; fix the corpus or bucket per width"))
-        df.withColumn("buckets",
-          when(col(vecCol).isNull, lit(null).cast("array<int>"))
-            .when(size(col(vecCol)) =!= d, raise_error(dimMsg))
-            .otherwise(call_function("vec_lsh_probe", col(vecCol), planesFlat,
-              lit(bits), lit(tables), lit(nprobe))))
-    }
-  }
-
-  /** [[scoredLshPairs]] with multi-probe candidate generation: entries
-    * join within a table across base AND probe buckets, so a pair whose
-    * signatures differ in one low-margin bit still collides. More bits
-    * (smaller buckets) buy back the probe fan-out — the operating points
-    * the spec pins hold candidates at-or-below single-probe while
-    * recovering more of the true top pairs in the near-uniform regime.
-    */
-  private def scoredLshPairsProbed(corpus0: DataFrame, bits: Int, tables: Int,
-                                   nprobe: Int, idCol: String,
-                                   vecCol: String): DataFrame = {
-    VectorFunctions.register(corpus0.sparkSession)
-    // round 17: same fan-out rationale as scoredLshPairs
-    val corpus = Tables.fanOut(corpus0)
-    val stride = 1 + nprobe
-    // round 18: pinned for the same reason as scoredLshPairs — the
-    // multi-probe hashing pass fed both self-join sides and ran twice.
-    // round 18 (cont.): pin BEFORE the explode (see scoredLshPairs — the
-    // inferred generate filter re-evaluated the whole probe kernel).
-    val bucketed = withLshProbes(corpus, bits, tables, nprobe, vecCol)
-      .localCheckpoint(eager = false)
-    val entries = bucketed
+    // Pinned as the compact (id, buckets) array frame, the kernel runs
+    // ONCE per vector and the inferred filter lands on a STORED column;
+    // the two per-side explodes are cheap array unpacks.
+    val bucketed =
+      (if (nprobe == 0) withLshBuckets(corpus, bits, tables, vecCol)
+       else withLshProbes(corpus, bits, tables, nprobe, vecCol))
+        .localCheckpoint(eager = false)
+    val exploded = bucketed
       .select(col(idCol), posexplode(col("buckets")).as(Seq("pos", "bucket")))
-      .withColumn("table", (col("pos") / stride).cast("int"))
+    val entries =
+      if (nprobe == 0) exploded.withColumnRenamed("pos", "table")
+      else exploded.withColumn("table", (col("pos") / (1 + nprobe)).cast("int"))
     val a = entries.select(col("table"), col("bucket"), col(idCol).as("id_a"))
     val b = entries.select(col("table").as("table_b"), col("bucket").as("bucket_b"),
       col(idCol).as("id_b"))
@@ -299,77 +248,37 @@ object EmbedOps {
         expr("vec_dot(vec_a, vec_b)").as("cosine"))
   }
 
-  /** Candidate-pair count of the multi-probe pipeline (nprobe=0 ≡ the
-    * single-probe pipeline) — the budget the spec holds fixed while
-    * comparing recall.
+  /** Candidate-pair count of the LSH pair pipeline — the budget the spec
+    * holds fixed while comparing recall.
     */
   def lshCandidateCount(corpus: DataFrame, bits: Int, tables: Int,
                         nprobe: Int, idCol: String = "vec_id",
                         vecCol: String = "embedding"): Long =
-    scoredLshPairsProbed(corpus, bits, tables, nprobe, idCol, vecCol)
+    scoredLshPairs(corpus, bits, tables, nprobe, idCol, vecCol)
       .select("id_a", "id_b").count()
 
-  /** [[topCosinePairsLsh]] with multi-probe candidates: the recall dial
-    * that does NOT widen buckets — flipping the lowest-margin bits
+  /** Scale twin of q32's global top-k most-similar pairs: LSH bucket
+    * candidates replace the O(n²) cross join, exact vec_dot ranks them,
+    * TakeOrderedAndProject keeps k. Multi-probe candidates are the recall
+    * dial that does NOT widen buckets — flipping the lowest-margin bits
     * probes exactly the adjacent buckets a just-missed pair fell into.
-    * Default operating point 8 bits × 5 tables × 4 probes, picked by
-    * sweep (tools/LshProbeTune) on the adversarial near-uniform
-    * fixtures: recall 9-10/10 vs the exact q32 top pairs at BOTH SFs
-    * with candidate pairs at 83% of the single-probe 4×8 baseline —
-    * higher bits shrink buckets (the quadratic cost term), probes buy
-    * the recall back linearly.
+    * Default operating point 8 bits × 5 tables × 4 probes, picked by a
+    * sweep on the adversarial near-uniform fixtures (global top-10
+    * cosines only ≈0.44–0.48): recall 9-10/10 vs the exact q32 top pairs
+    * at BOTH SFs with candidate pairs at 83% of the single-probe 4×8
+    * baseline (`nprobe` = 0, which measures 8/10) — higher bits shrink
+    * buckets (the quadratic cost term), probes buy the recall back
+    * linearly. EmbedOpsSpec pins both operating points. Bench twin, no
+    * oracle (SURVEY §2.0.10); rounding and tie order mirror q32.
     */
   def topCosinePairsLshMultiProbe(corpus: DataFrame, k: Int, bits: Int = 8,
                                   tables: Int = 5, nprobe: Int = 4,
                                   idCol: String = "vec_id",
                                   vecCol: String = "embedding"): DataFrame =
-    scoredLshPairsProbed(corpus, bits, tables, nprobe, idCol, vecCol)
+    scoredLshPairs(corpus, bits, tables, nprobe, idCol, vecCol)
       .withColumn("cosine", round(col("cosine"), 4))
       .orderBy(desc("cosine"), col("id_a"), col("id_b"))
       .limit(k)
-
-  /** IVF (inverted-file) ANN index: k-means cells trained with a fixed
-    * number of Lloyd iterations from a deterministic init (first k vectors
-    * by id), each vector assigned to its nearest cell. Querying probes only
-    * the `nprobe` cells nearest the query — the classic coarse-quantizer
-    * trade: recall vs fraction of corpus scanned (~nprobe/k).
-    *
-    * Returns (assignments df [idCol, vecCol, cell], centroids: k × dim).
-    * Centroids are collected to the driver (k × dim doubles — tiny) and
-    * shipped as literals: at any corpus scale the per-row work is k dot
-    * products, map-side only.
-    */
-  def ivfBuild(corpus: DataFrame, k: Int = 16, iters: Int = 2,
-               idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame, Array[Array[Double]]) = {
-    VectorFunctions.register(corpus.sparkSession)
-    val pinned = corpus.persist()   // scanned iters+2 times during training
-    try {
-      var cents: Array[Array[Double]] = pinned.orderBy(idCol).limit(k)
-        .select(vecCol).collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-        .map(l2normalize)
-      for (_ <- 0 until iters) {
-        val assigned = assignCells(pinned, cents, idCol, vecCol)
-        val newCents = assigned
-          .select(col("cell"), posexplode(col(vecCol)).as(Seq("dim", "v")))
-          .groupBy("cell", "dim")
-          .agg(avg(col("v").cast("double")).as("m"))
-          .groupBy("cell")
-          .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("p"))
-          .withColumn("c", expr("transform(p, x -> x.m)"))
-          .select("cell", "c").collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-        // spherical k-means: mean-of-unit-vectors centroids are renormalized
-        // so dot-product argmax IS nearest-by-cosine (raw means have uneven
-        // norms that bias assignment toward tight clusters); empty cells
-        // keep their previous centroid
-        cents = cents.indices
-          .map(i => newCents.get(i).map(l2normalize).getOrElse(cents(i))).toArray
-      }
-      (assignCells(corpus, cents, idCol, vecCol), cents)
-    } finally pinned.unpersist()
-  }
 
   private def l2normalize(v: Array[Double]): Array[Double] = {
     val n = math.sqrt(v.map(x => x * x).sum)
@@ -427,12 +336,11 @@ object EmbedOps {
   }
 
   /** Deterministic bounded training sample for ANN quantizer training —
-    * the piece that makes index builds corpus-scale-free. `ivfBuild` /
-    * `pqTrain` scan the full corpus once per Lloyd iteration: correct,
-    * but at 10⁹ vectors that is iters × (a full pass) spent refining
-    * centroids whose quality saturates at a few thousand training points
-    * per cell (the Faiss train-on-sample / add-all split exists for
-    * exactly this reason).
+    * the piece that makes index builds corpus-scale-free. Training Lloyd
+    * iterations on the full corpus would cost iters × (a full pass) at
+    * 10⁹ vectors, spent refining centroids whose quality saturates at a
+    * few thousand training points per cell (the Faiss train-on-sample /
+    * add-all split exists for exactly this reason).
     *
     * Sampling is by hash threshold, not orderBy(hash).limit(n): the
     * filter is a map-side scan predicate (no TakeOrdered driver merge of
@@ -474,10 +382,11 @@ object EmbedOps {
 
   /** Driver-side spherical k-means over a bounded sample: Forgy seeding
     * from the hash-ordered sample (deterministic, RNG-free) + Lloyd by
-    * max-dot assignment with renormalized mean updates, matching
-    * `ivfBuild`'s distributed iteration exactly (same metric, same
-    * empty-cell carry). Sample-sized work: O(sample × k × dim) per
-    * iteration, microseconds at 4096×16×64.
+    * max-dot assignment with renormalized mean updates: mean-of-unit-
+    * vectors centroids are renormalized so dot-product argmax IS
+    * nearest-by-cosine, and an empty cell keeps its previous centroid.
+    * Sample-sized work: O(sample × k × dim) per iteration, microseconds
+    * at 4096×16×64.
     */
   private[engine] def sphericalKmeans(sample: Array[Array[Float]], k: Int,
                                       iters: Int): Array[Array[Double]] = {
@@ -486,8 +395,7 @@ object EmbedOps {
     // Forgy init on the hash-ordered sample: the sample arrives in
     // xxhash64 order, so its first k points ARE a uniform random draw —
     // deterministic with no RNG state. (A k-means++ D²-weighted seeding
-    // was measured on the label-clustered fixture and did not beat this;
-    // tools/SampledAnnTune holds the comparison harness.)
+    // was measured on the label-clustered fixture and did not beat this.)
     var cents = pts.take(k)
     for (_ <- 0 until iters) {
       val sums = Array.fill(k)(new Array[Double](pts.head.length))
@@ -508,14 +416,17 @@ object EmbedOps {
     cents
   }
 
-  /** Scale path for `ivfBuild`: identical index layout and query path,
-    * but the coarse quantizer trains on a `trainingSample` driver-side —
-    * corpus cost is 2 bounded jobs (count + sample scan) plus the ONE
-    * final assignment pass, independent of `iters`. `ivfBuild`'s
-    * per-iteration full-corpus assignment is the round-7 verdict's named
-    * scale gap; this is the k-means-on-sample answer (the sample bounds
-    * work, k-means++ seeding replaces first-k-by-id, and the extra
-    * iterations it affords — default 8 vs 2 — buy back centroid quality).
+  /** IVF (inverted-file) coarse quantizer: spherical k-means cells trained
+    * on a `trainingSample` driver-side, then each vector assigned to its
+    * nearest cell. Querying probes only the `nprobe` cells nearest the
+    * query — the classic coarse-quantizer trade: recall vs fraction of
+    * corpus scanned (~nprobe/k). Corpus cost is 2 bounded jobs (count +
+    * sample scan) plus the ONE assignment pass, independent of `iters`.
+    *
+    * Returns (assignments df [idCol, vecCol, cell], centroids: k × dim).
+    * Centroids live on the driver (k × dim doubles — tiny) and ship as
+    * literals: at any corpus scale the per-row work is k dot products,
+    * map-side only. [[AnnIndex]] persists this layout.
     */
   def ivfBuildSampled(corpus: DataFrame, k: Int = 16, iters: Int = 8,
                       maxTrain: Int = 4096,
@@ -526,8 +437,10 @@ object EmbedOps {
     (assignCells(corpus, cents, idCol, vecCol), cents)
   }
 
-  /** IVF query: probe the `nprobe` cells nearest the query, exact-score
-    * within them.
+  /** IVF query over an in-session [[ivfBuildSampled]] layout: probe the
+    * `nprobe` cells nearest the query, exact-score within them. Kept as
+    * the reference implementation AnnIndexSpec compares the persisted
+    * index's `AnnIndex.knn` against; serving goes through [[AnnIndex]].
     */
   def knnIvf(assigned: DataFrame, cents: Array[Array[Double]],
              query: Seq[Float], topK: Int, nprobe: Int = 3,
@@ -545,154 +458,12 @@ object EmbedOps {
       .limit(topK)
   }
 
-  /** ANN top-k for one query: probe only corpus rows sharing the query's
-    * bucket in ANY table, then exact vec_dot scoring inside the probed set.
-    * At scale the probe is a bucket-partitioned lookup, not a full scan —
-    * expected probed fraction ≈ tables / 2^bits of the corpus.
-    */
-  def knnLsh(corpusWithBuckets: DataFrame, query: Seq[Float], k: Int,
-             bits: Int = 4, tables: Int = 8,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpusWithBuckets.sparkSession
-    VectorFunctions.register(spark)
-    // compute the query's buckets with the same expression, driver-side
-    import spark.implicits._
-    val qDf = Seq(Tuple1(query)).toDF(vecCol)
-      .withColumn(vecCol, col(vecCol).cast("array<float>"))
-    val qBuckets = withLshBuckets(qDf, bits, tables, vecCol)
-      .select("buckets").head().getSeq[Int](0)
-    // guard against a bits/tables mismatch with what bucketed the corpus —
-    // wrong params would silently probe nothing (even the self-match).
-    // Probe a NON-NULL buckets row: null-vector rows carry NULL buckets.
-    val shapeProbe = corpusWithBuckets
-      .filter(col("buckets").isNotNull).select(col("buckets")).take(1)
-    if (shapeProbe.isEmpty)  // empty or all-null corpus: no neighbours
-      return corpusWithBuckets.select(col(idCol), lit(0.0).as("score")).limit(0)
-    locally {
-      val bs = shapeProbe(0).getSeq[Int](0)
-      require(bs.length == tables,
-        s"corpus bucketed with ${bs.length} tables, query uses $tables")
-      require(bs.forall(b => b >= 0 && b < (1 << bits)),
-        s"corpus bucket values exceed 2^$bits — bits mismatch")
-    }
-    val probeCond = (0 until tables)
-      .map(t => col("buckets")(t) === lit(qBuckets(t)))
-      .reduce(_ || _)
-    corpusWithBuckets
-      .filter(probeCond)
-      .withColumn("score", call_function("vec_dot", col(vecCol), floatArrayLit(query)))
-      .select(col(idCol), col("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
-
-  /** Query-time multi-probe ANN: the corpus keeps its single-bucket
-    * layout ([[withLshBuckets]] — storage unchanged); the QUERY probes
-    * its base bucket plus the `nprobe` lowest-margin bit flips per
-    * table (the classic multi-probe formulation: one query fans out to
-    * the adjacent buckets its near neighbours most likely fell into).
-    * Recall rises with nprobe at probed-fraction cost
-    * ≈ tables·(1+nprobe)/2^bits; nprobe=0 degenerates to [[knnLsh]].
-    */
-  def knnLshMultiProbe(corpusWithBuckets: DataFrame, query: Seq[Float], k: Int,
-                       bits: Int = 4, tables: Int = 8, nprobe: Int = 2,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val spark = corpusWithBuckets.sparkSession
-    VectorFunctions.register(spark)
-    import spark.implicits._
-    val qDf = Seq(Tuple1(query)).toDF(vecCol)
-      .withColumn(vecCol, col(vecCol).cast("array<float>"))
-    val qBuckets = withLshProbes(qDf, bits, tables, nprobe, vecCol)
-      .select("buckets").head().getSeq[Int](0)
-    val shapeProbe = corpusWithBuckets
-      .filter(col("buckets").isNotNull).select(col("buckets")).take(1)
-    if (shapeProbe.isEmpty)
-      return corpusWithBuckets.select(col(idCol), lit(0.0).as("score")).limit(0)
-    locally {
-      val bs = shapeProbe(0).getSeq[Int](0)
-      require(bs.length == tables,
-        s"corpus bucketed with ${bs.length} tables, query uses $tables")
-      require(bs.forall(b => b >= 0 && b < (1 << bits)),
-        s"corpus bucket values exceed 2^$bits — bits mismatch")
-    }
-    val stride = 1 + nprobe
-    val probeCond = (for {
-      t <- 0 until tables
-      j <- 0 until stride
-    } yield col("buckets")(t) === lit(qBuckets(t * stride + j))).reduce(_ || _)
-    corpusWithBuckets
-      .filter(probeCond)
-      .withColumn("score", call_function("vec_dot", col(vecCol), floatArrayLit(query)))
-      .select(col(idCol), col("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
-
   /** Product-quantization model: m subspaces × k cells × dsub dims, flat
     * centroid layout [(j·k + c)·dsub, +dsub). Centroids are the ONLY
     * driver-side state (m·k·dsub floats — e.g. 8×16×8 = 1 KB for a 64-dim
     * corpus), shipped as a literal into the codegen'd kernels.
     */
   case class PqModel(m: Int, k: Int, dsub: Int, centroids: Array[Float])
-
-  /** Train a PQ codebook with per-subspace Lloyd iterations, deterministic
-    * init (first k vectors by id, sliced per subspace). Each iteration is
-    * one encode pass (codegen'd vec_pq_encode) + one (subspace, cell, dim)
-    * aggregation — map-side combinable, tiny driver collect. Empty cells
-    * keep their previous centroid.
-    */
-  def pqTrain(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 3,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              dim: Option[Int] = None): PqModel = {
-    VectorFunctions.register(corpus.sparkSession)
-    // embedding width is model metadata — pass `dim` to skip the probe job
-    // (matters when training codebooks in a loop). When probing, skip null
-    // vectors (a NULL first row must not NPE the probe — same rule as
-    // withLshBuckets).
-    val d = dim.getOrElse {
-      val dimProbe = corpus.filter(col(vecCol).isNotNull)
-        .select(size(col(vecCol))).take(1)
-      require(dimProbe.nonEmpty, "pqTrain needs at least one non-null vector")
-      dimProbe(0).getInt(0)
-    }
-    require(d % m == 0, s"dim $d must divide into m=$m subspaces")
-    require(k >= 2 && k <= 256,
-      s"k=$k subquantizer codewords must fit one byte code (2..256)")
-    val dsub = d / m
-    val pinned = corpus.persist()
-    try {
-      val init = pinned.filter(col(vecCol).isNotNull)
-        .orderBy(idCol).limit(k).select(vecCol).collect()
-        .map(_.getSeq[Float](0).toArray)
-      require(init.length == k, s"corpus must have at least k=$k non-null vectors")
-      var cents = new Array[Float](m * k * dsub)
-      for (j <- 0 until m; c <- 0 until k; d <- 0 until dsub)
-        cents((j * k + c) * dsub + d) = init(c)(j * dsub + d)
-      for (_ <- 0 until iters) {
-        val enc = pinned.withColumn("pq_codes",
-          call_function("vec_pq_encode", col(vecCol), floatArrayLit(cents), lit(m), lit(k)))
-        val sums = enc
-          .select(posexplode(col("pq_codes")).as(Seq("j", "code")),
-            col(vecCol))
-          // unsigned byte reinterpretation (round 14): codes ≥ 128 land
-          // as negative signed bytes; pmod recovers the codebook index,
-          // enabling k up to 256 (8-bit subquantizers)
-          .select(col("j"), pmod(col("code").cast("int"), lit(256)).as("code"),
-            posexplode(expr(s"slice($vecCol, j * $dsub + 1, $dsub)")).as(Seq("d", "v")))
-          .groupBy("j", "code", "d")
-          .agg(avg(col("v").cast("double")).as("mean"))
-          .collect()
-        val next = cents.clone()
-        sums.foreach { r =>
-          val (j, c, d) = (r.getInt(0), r.getInt(1), r.getInt(2))
-          next((j * k + c) * dsub + d) = r.getDouble(3).toFloat
-        }
-        cents = next
-      }
-      PqModel(m, k, dsub, cents)
-    } finally pinned.unpersist()
-  }
 
   /** df + `pq_codes` (m bytes per vector — 32× smaller than 64-dim float32). */
   def pqEncode(df: DataFrame, model: PqModel,
@@ -703,96 +474,11 @@ object EmbedOps {
         floatArrayLit(model.centroids), lit(model.m), lit(model.k)))
   }
 
-  /** PQ top-k by asymmetric distance: the per-query m×k table of partial
-    * dot products (query subvector · centroid) is computed driver-side
-    * (m·k dot products of length dsub — microseconds) and shipped as one
-    * literal; each candidate costs m table lookups via the codegen'd
-    * vec_pq_adc — the float vectors are never read. At 100 TB this scans
-    * the codes column only: 8 bytes/vector instead of 256.
-    */
-  def pqKnn(encoded: DataFrame, model: PqModel, query: Seq[Float], topK: Int,
-            idCol: String = "vec_id"): DataFrame = {
-    VectorFunctions.register(encoded.sparkSession)
-    require(query.length == model.m * model.dsub,
-      s"query dim ${query.length} != model dim ${model.m * model.dsub} " +
-        s"(m=${model.m} × dsub=${model.dsub})")
-    val table = new Array[Float](model.m * model.k)
-    for (j <- 0 until model.m; c <- 0 until model.k) {
-      var acc = 0.0
-      for (d <- 0 until model.dsub)
-        acc += query(j * model.dsub + d).toDouble *
-          model.centroids((j * model.k + c) * model.dsub + d).toDouble
-      table(j * model.k + c) = acc.toFloat
-    }
-    encoded
-      .withColumn("adc_score",
-        call_function("vec_pq_adc", col("pq_codes"), floatArrayLit(table), lit(model.k)))
-      .select(col(idCol), col("adc_score"))
-      .orderBy(desc("adc_score"), col(idCol))
-      .limit(topK)
-  }
-
-  /** PQ as deployed in production: ADC generates a cheap shortlist
-    * (`shortlist` candidates scanned at m bytes each), exact vec_dot
-    * re-ranks only those — recall of near-exact search at a fraction of
-    * the float-scan cost. `encoded` must carry BOTH `pq_codes` and the
-    * float vector column (the rerank join is avoided by keeping them in
-    * one row; at 100 TB the shortlist re-rank touches `shortlist` float
-    * vectors instead of the corpus).
-    */
-  def pqKnnRerank(encoded: DataFrame, model: PqModel, query: Seq[Float],
-                  topK: Int, shortlist: Int = 100,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(encoded.sparkSession)
-    val candidates = pqKnn(encoded, model, query, shortlist, idCol)
-      .select(col(idCol))
-    encoded.join(broadcast(candidates), idCol)
-      .withColumn("score", call_function("vec_dot", col(vecCol), floatArrayLit(query)))
-      .select(col(idCol), col("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(topK)
-  }
-
   /** IVF-PQ index state: coarse-quantizer centroids + the PQ codebook
     * trained on RESIDUALS (vector − its cell centroid). Driver-side size
     * is kCells·dim doubles + m·k·dsub floats — KBs at any corpus scale.
     */
   case class IvfPqIndex(cells: Array[Array[Double]], model: PqModel)
-
-  /** IVF-PQ composition — the standard billion-scale ANN layout (Faiss
-    * IVFPQ with METRIC_INNER_PRODUCT): the IVF coarse quantizer buckets
-    * the corpus into cells, and PQ encodes each vector's RESIDUAL against
-    * its cell centroid. Residuals matter: they have far smaller variance
-    * than raw vectors, so the same m×k codebook quantizes them with less
-    * error than it would the vectors themselves.
-    *
-    * Query cost at scale = nprobe/kCells of the CODES column (m bytes per
-    * vector) + `shortlist` float vectors for the exact re-rank — both
-    * knobs independent of corpus size. The returned frame carries
-    * (id, vec, cell, pq_codes); partition it by `cell` on disk and a
-    * probe reads only the probed cells' files.
-    */
-  def ivfPqBuild(corpus: DataFrame, kCells: Int = 16, m: Int = 8,
-                 kPq: Int = 16, cellIters: Int = 2, pqIters: Int = 3,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 dim: Option[Int] = None): (DataFrame, IvfPqIndex) = {
-    val spark = corpus.sparkSession
-    VectorFunctions.register(spark)
-    val (assigned, cents) = ivfBuild(corpus, kCells, cellIters, idCol, vecCol)
-    // residual = vector − cell centroid, via a broadcast join with the
-    // kCells-row centroid table (zip_with keeps it scan-speed, codegen'd)
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex
-      .map { case (c, i) => (i, c.map(_.toFloat).toSeq) }.toSeq
-      .toDF("cell", "__cent")
-    val withRes = assigned.join(broadcast(centsDf), "cell")
-      .withColumn("__residual",
-        expr(s"zip_with($vecCol, __cent, (a, b) -> CAST(a AS FLOAT) - b)"))
-    val model = pqTrain(withRes, m, kPq, pqIters, idCol, "__residual", dim)
-    val encoded = pqEncode(withRes, model, "__residual")
-      .drop("__cent", "__residual")
-    (encoded, IvfPqIndex(cents, model))
-  }
 
   /** Driver-side per-subspace Euclidean k-means for PQ codebooks over a
     * bounded sample: k-means++ seeding (squared-L2 weights, seeded RNG,
@@ -869,15 +555,21 @@ object EmbedOps {
     PqModel(m, k, dsub, flat)
   }
 
-  /** Scale path for `ivfPqBuild` — the Faiss train/add split end to end:
-    * ONE bounded sample trains BOTH quantizers driver-side (coarse cells
-    * via sphericalKmeans; the PQ codebook on the sample's residuals
-    * against its nearest trained cell — the same residual the distributed
-    * pass computes, float-arithmetic-identical), then a single
-    * distributed pass assigns cells and PQ-encodes residuals. Corpus
-    * cost: count + sample scan + one encode pass — `ivfPqBuild` spends
-    * cellIters + pqIters full scans on the same job. Index layout, query
-    * path (`knnIvfPq`) and driver-state size are unchanged.
+  /** IVF-PQ composition — the standard billion-scale ANN layout (Faiss
+    * IVFPQ with METRIC_INNER_PRODUCT): the IVF coarse quantizer buckets
+    * the corpus into cells, and PQ encodes each vector's RESIDUAL against
+    * its cell centroid. Residuals matter: they have far smaller variance
+    * than raw vectors, so the same m×k codebook quantizes them with less
+    * error than it would the vectors themselves.
+    *
+    * The Faiss train/add split end to end: ONE bounded sample trains BOTH
+    * quantizers driver-side (coarse cells via sphericalKmeans; the PQ
+    * codebook on the sample's residuals against its nearest trained cell
+    * — the same residual the distributed pass computes, float-arithmetic-
+    * identical), then a single distributed pass assigns cells and
+    * PQ-encodes residuals. Corpus cost: count + sample scan + one encode
+    * pass, independent of cellIters and pqIters. The returned frame
+    * carries (id, vec, cell, pq_codes); [[AnnIndex]] persists it.
     */
   def ivfPqBuildSampled(corpus: DataFrame, kCells: Int = 16, m: Int = 8,
                         kPq: Int = 16, cellIters: Int = 8, pqIters: Int = 8,
@@ -923,8 +615,11 @@ object EmbedOps {
     (encoded, IvfPqIndex(cents, model))
   }
 
-  /** IVF-PQ top-k: probe the `nprobe` cells nearest the query, rank
-    * their codes by ADC, exact-re-rank the shortlist.
+  /** IVF-PQ top-k over an in-session [[ivfPqBuildSampled]] layout: probe
+    * the `nprobe` cells nearest the query, rank their codes by ADC,
+    * exact-re-rank the shortlist. Kept as the reference implementation
+    * AnnIndexSpec compares the persisted index's `AnnIndex.knn` against;
+    * serving goes through [[AnnIndex]].
     *
     * Inner-product decomposes EXACTLY over the residual encoding:
     * dot(q, x) = dot(q, cent_c) + dot(q, x − cent_c); PQ approximates

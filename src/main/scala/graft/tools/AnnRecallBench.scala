@@ -96,16 +96,6 @@ object AnnRecallBench {
       println(f"[annrecall] nprobe=$np%d/16: ivf recall@10=$rIvf%.2f " +
         f"ivfpq(kPq=$kPq%d) recall@10 $pqLine")
     }
-    // session-side LSH multi-probe over the same churned corpus
-    val bucketed = EmbedOps.withLshBuckets(corpus, bits = 8, tables = 8).cache()
-    bucketed.count()
-    Seq(0, 1, 2, 4).foreach { np =>
-      val r = recallOf(q =>
-        EmbedOps.knnLshMultiProbe(bucketed, q, 10, bits = 8, tables = 8,
-          nprobe = np))
-      println(f"[annrecall] lsh multi-probe nprobe=$np%d (bits 8 x 8 tables): " +
-        f"recall@10=$r%.2f")
-    }
     spark.stop()
   }
 }

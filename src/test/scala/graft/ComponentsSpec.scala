@@ -111,12 +111,8 @@ class ComponentsSpec extends SparkSpecBase {
       // round to observe convergence = 4 loop iterations
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
       Components.connectedComponents(edges).unpersist()
-      // listener events post asynchronously — wait for the count to settle
-      var (prev, settled) = (-1, 0)
-      while (settled < 3) {
-        Thread.sleep(200)
-        if (actions.size == prev) settled += 1 else { prev = actions.size; settled = 0 }
-      }
+      // listener events post asynchronously — drain the bus before counting
+      org.apache.spark.sql.graftshim.Bus.drain(spark.sparkContext)
       // init (rebase + count) + 4 rounds × (rebase + count) = 10; a
       // separate convergence action would push this to ≥ 14. Upper bound
       // rather than equality: the exact per-round wrapping of Dataset.rdd

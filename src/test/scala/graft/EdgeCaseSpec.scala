@@ -221,25 +221,6 @@ class EdgeCaseSpec extends SparkSpecBase {
     assert(e2.getMessage.contains("nothing to compact"), e2.getMessage)
   }
 
-  test("knnLsh tolerates null-bucket rows and empty/all-null corpora") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Option.empty[Array[Float]]),        // null buckets ride first
-      (2L, Some(Array(1.0f, 0.0f))),
-      (3L, Some(Array(0.9f, 0.1f)))
-    ).toDF("vec_id", "embedding")
-    val bucketed = graft.engine.EmbedOps.withLshBuckets(df, bits = 2, tables = 2)
-    val top = graft.engine.EmbedOps.knnLsh(bucketed, Seq(1.0f, 0.0f), k = 2,
-      bits = 2, tables = 2).collect()
-    assert(top.nonEmpty && top.forall(_.getLong(0) != 1L))
-    // all-null corpus: zero neighbours, no NPE, and no phantom collisions
-    val allNull = Seq((1L, Option.empty[Array[Float]])).toDF("vec_id", "embedding")
-    val nb = graft.engine.EmbedOps.withLshBuckets(allNull, bits = 2, tables = 2)
-    assert(nb.filter(col("buckets").isNotNull).count() == 0)
-    assert(graft.engine.EmbedOps.knnLsh(nb, Seq(1.0f, 0.0f), k = 2,
-      bits = 2, tables = 2).isEmpty)
-  }
-
   test("Components: empty pair set leaves every document untouched") {
     import spark.implicits._
     val docs = (1L to 5L).map(i => (i, s"t$i")).toDF("doc_id", "text")

@@ -18,10 +18,15 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  /** `body`'s result and the Spark jobs it started, counted once the
-    * listener bus has drained.
+  /** `body`'s result and the Spark jobs it started on the shared session. */
+  def jobsDuring[T](body: => T): (T, Int) = SparkSpecBase.jobsDuring(spark)(body)
+}
+
+object SparkSpecBase {
+  /** `body`'s result and the Spark jobs it started on `spark`, counted
+    * once the listener bus has drained.
     */
-  def jobsDuring[T](body: => T): (T, Int) = {
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -35,9 +40,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       (out, jobs.get)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
-}
 
-object SparkSpecBase {
   def session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -1,9 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.CommandExecutionMode
 import org.apache.spark.sql.functions.col
@@ -55,25 +53,9 @@ class DeletionVectorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_dv").toString + "/table"
 
-  /** Spark jobs started by `body`; listener events post asynchronously,
-    * so the count is read once it has stayed put for three polls.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var (prev, settled) = (-1, 0)
-      while (settled < 3) {
-        Thread.sleep(200)
-        if (jobs.get == prev) settled += 1 else { prev = jobs.get; settled = 0 }
-      }
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Spark jobs started by `body` on this spec's session. */
+  private def jobsDuring(body: => Unit): Int =
+    graft.SparkSpecBase.jobsDuring(spark)(body)._2
 
   /** Plan a statement without running it (DML commands run eagerly
     * through `spark.sql`).
