@@ -4,21 +4,24 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** The one reader of deletion-vector (DV) files.
+/** The deletion-vector (DV) files and their one reader.
   *
   * A DV dir (`tomb_vNNNNNNNN/`, or a `tomb_u…` dir staged before its
   * commit) holds parquet files of two columns: `__rel` STRING, the last
   * two segments of a data file's path (`<leaf dir>/<file>`), and `__ri`
   * BIGINT, a row index inside that file. Readers anti-join their scans
-  * on the pair. Every read of DV files goes through [[read]], which
+  * on the pair. Every read of DV files goes through [[read]], a caller
+  * of the committed-file reader ([[CommittedFiles]]), which
   *   - declares that schema, so planning starts no schema-inference job;
-  *   - builds its relation over an explicit file list (cached per DV dir
-  *     by [[SnapshotLog.dvDirFiles]]), so planning starts no listing job
-  *     however many DV dirs a version carries;
-  *   - refuses any file whose footer lacks either column at its type.
-  *     Under a declared schema parquet returns nulls for a missing
-  *     column, and a null `__ri` matches nothing in the anti-join:
-  *     deleted rows would come back silently.
+  *   - plans over an explicit, unpartitioned file list (listed and
+  *     checked once per DV dir, then served from the planning cache), so
+  *     planning starts no listing job however many DV dirs a version
+  *     carries.
+  * The footer check is this file's own: it refuses any file whose
+  * footer lacks either column at its parquet type. Under a declared
+  * schema parquet returns nulls for a missing column, and a null `__ri`
+  * matches nothing in the anti-join: deleted rows would come back
+  * silently.
   */
 private[graft] object DeletionVectors {
 
@@ -29,18 +32,10 @@ private[graft] object DeletionVectors {
     * absolute paths for a clone's carried dirs), planned without a job.
     */
   def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val rootPath = new Path(root.replaceAll("/+$", ""))
     val files = dirs.distinct.flatMap(d =>
-      SnapshotLog.dvDirFiles(spark, new Path(rootPath, d)))
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = new ListedFileIndex(files),
-      partitionSchema = StructType(Nil),
-      dataSchema = Schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark))
+      CommittedFiles.checked(spark, new Path(rootPath, d))(checkFooters(spark, _)).files)
+    CommittedFiles.read(spark, files, Schema)
   }
 
   /** `base` (a fresh file-source scan, so `_metadata` resolves) with
@@ -60,17 +55,11 @@ private[graft] object DeletionVectors {
     else positions(base).join(read(spark, root, dirs), Seq("__rel", "__ri"),
       "left_anti")
 
-  /** A DV dir's data files (hidden `_`/`.` names skipped, as Spark's own
-    * listing does), each footer checked against [[Schema]].
-    */
-  private[sources] def listChecked(spark: SparkSession, dir: Path): Seq[FileStatus] = {
+  /** Checks each DV file's footer against [[Schema]]. */
+  private def checkFooters(spark: SparkSession, files: Seq[FileStatus]): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = dir.getFileSystem(conf).listStatus(dir).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName)
     files.foreach(st => checkFooter(conf, st))
-    files
+    Schema
   }
 
   private def checkFooter(conf: org.apache.hadoop.conf.Configuration,
@@ -102,21 +91,5 @@ private[graft] object DeletionVectors {
       case i: LT.IntLogicalTypeAnnotation => i.getBitWidth == 64 && i.isSigned
       case _ => false
     })
-  }
-
-  /** A file index over a fixed file list: no listing, no pruning. */
-  private class ListedFileIndex(files: Seq[FileStatus])
-      extends org.apache.spark.sql.execution.datasources.FileIndex {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.execution.datasources.PartitionDirectory
-    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
-    override def partitionSchema: StructType = StructType(Nil)
-    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.map(_.getLen).sum
-    override def listFiles(partitionFilters: Seq[Expression],
-                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
-        files.toArray))
   }
 }

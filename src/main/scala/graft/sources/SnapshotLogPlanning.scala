@@ -301,7 +301,7 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
     ref: java.lang.ref.SoftReference[AnyRef], weight: Long)
   // the key's last slot tells the two kinds of entry apart
   private val PlanInputsKind = 0L
-  private val DvDirKind = 1L
+  private val CommittedDirKind = 1L
   // access-ordered: iteration visits eldest-used first (the evict order)
   private val planCache = new java.util.LinkedHashMap[
     (String, Long, Long, Long), PlanCacheEntry](16, 0.75f, true)
@@ -428,26 +428,27 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
     }
   }
 
-  /** A deletion-vector dir's footer-checked data files
-    * ([[DeletionVectors.listChecked]]), served from the planning cache
-    * beside the version inputs: a committed DV dir never changes, so
-    * its listing and footer check are paid once, not on every plan.
-    * The key carries the dir's modification time (one stat, no
-    * listing) — a table dropped and re-created at the same path writes
-    * new DV dirs under the old names, whose old listing must not serve.
+  /** A committed dir's checked listing ([[CommittedFiles.checked]]: a
+    * deletion-vector dir or an ANN index slice), served from the
+    * planning cache beside the version inputs: a committed dir never
+    * changes, so its listing and footer check are paid once, not on
+    * every plan. The key carries the dir's modification time (one stat,
+    * no listing) — a table dropped and re-created at the same path, or
+    * an index rebuilt at the same table version, writes new dirs under
+    * the old names, whose old listing must not serve. A `list` that
+    * throws (a refused footer) admits nothing.
     */
-  private[sources] def dvDirFiles(spark: SparkSession, dir: Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    if (spark.conf.get("spark.graft.plan.cache", "true") != "true")
-      return DeletionVectors.listChecked(spark, dir)
+  private[sources] def committedDir(spark: SparkSession, dir: Path)
+                                   (list: => CommittedFiles.Checked): CommittedFiles.Checked = {
+    if (spark.conf.get("spark.graft.plan.cache", "true") != "true") return list
     val key = (dir.toString, fs(spark, dir).getFileStatus(dir).getModificationTime,
-      0L, DvDirKind)
+      0L, CommittedDirKind)
     planCacheGet(key) match {
-      case Some(hit) => hit.asInstanceOf[Seq[org.apache.hadoop.fs.FileStatus]]
+      case Some(hit) => hit.asInstanceOf[CommittedFiles.Checked]
       case None =>
-        val fresh = DeletionVectors.listChecked(spark, dir)
+        val fresh = list
         planCachePut(key, fresh,
-          fresh.iterator.map(f => 2L * f.getPath.toString.length + 160L).sum,
+          fresh.files.iterator.map(f => 2L * f.getPath.toString.length + 160L).sum,
           planCacheBudget(spark))
         fresh
     }

@@ -530,11 +530,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
     val raw =
       if (paths.isEmpty)
         ridSliceOrEmpty(spark, root, v, Nil).drop("_row_id")
-      else schemaOf(spark, root, v) match {
-        case Some(st) => fromPhysicalSelect(
-          spark.read.schema(physicalSchema(st)).parquet(paths: _*), st)
-        case None => spark.read.parquet(paths: _*).drop(RowIdCol)
-      }
+      else rawSlice(spark, root, v, paths)
     raw.select(keys.map(col(_)): _*).distinct()
   }
 
@@ -633,13 +629,20 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(fields))
-    } else {
-      val raw = schemaOf(spark, root, v) match {
-        case Some(st) => fromPhysicalSelect(
-          spark.read.schema(physicalSchema(st)).parquet(paths: _*), st)
-        case None => spark.read.parquet(paths: _*).drop(RowIdCol)
-      }
-      applyTombstoneDirs(spark, root, tombDirsOf(spark, root, v), raw)
+    } else applyTombstoneDirs(spark, root, tombDirsOf(spark, root, v),
+      rawSlice(spark, root, v, paths))
+
+  /** A non-empty path slice of version `v` under its declared schema:
+    * the pin's physical schema renamed to logical names, or (unpinned)
+    * [[tableSchema]], one footer read on the driver that already leaves
+    * out the row-id column — either way, no schema-inference job.
+    */
+  private def rawSlice(spark: SparkSession, root: String, v: Long,
+                       paths: Seq[String]): DataFrame =
+    schemaOf(spark, root, v) match {
+      case Some(st) => fromPhysicalSelect(
+        spark.read.schema(physicalSchema(st)).parquet(paths: _*), st)
+      case None => spark.read.schema(tableSchema(spark, root, v)).parquet(paths: _*)
     }
 
   /** Latest-per-key VISIBLE rows restricted to a path slice, no
@@ -652,13 +655,8 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
                               mk: Seq[String]): DataFrame =
     if (paths.isEmpty) verSliceOrEmpty(spark, root, v, Nil)
     else {
-      val base0 = schemaOf(spark, root, v) match {
-        case Some(st) => fromPhysicalSelect(
-          spark.read.schema(physicalSchema(st)).parquet(paths: _*), st)
-        case None => spark.read.parquet(paths: _*).drop(RowIdCol)
-      }
       val vis = applyTombstoneDirs(spark, root, tombDirsOf(spark, root, v),
-        base0.withColumn(MorSeqCol, morSeq))
+        rawSlice(spark, root, v, paths).withColumn(MorSeqCol, morSeq))
       resolveLatest(vis, mk)
     }
 

@@ -4,18 +4,22 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint: every read of deletion-vector (DV) files goes through
-  * `graft.sources.DeletionVectors`. An ad-hoc `spark.read.parquet(<tomb
-  * dirs>)` declares no schema and lists its paths itself, so it brings
-  * back the schema-inference job (and, past 32 DV dirs, the parallel
-  * listing job) on every plan of a DV-bearing statement — and it skips
-  * the reader's footer check.
-  *
-  * A DataFrameReader chain (`x.read` … `.parquet(…)` / `.load(…)` …, up
-  * to the end of the method chain) counts as a DV read when the paths
-  * it reads name a tomb dir or the chain names a DV column (`__rel`,
-  * `__ri`). The ANN index's own slice tombstones (`AnnIndex`) are not
-  * table DV files and do not match.
+/** Source lint over reads of committed, immutable files: they go
+  * through the committed-file reader (`graft.sources.CommittedFiles`).
+  *   - Every read of table deletion-vector (DV) files goes through
+  *     `graft.sources.DeletionVectors`, its DV caller. An ad-hoc
+  *     `spark.read.parquet(<tomb dirs>)` declares no schema and lists
+  *     its paths itself, so it brings back the schema-inference job
+  *     (and, past 32 DV dirs, the parallel listing job) on every plan
+  *     of a DV-bearing statement — and it skips the reader's footer
+  *     check. A DataFrameReader chain (`x.read` … `.parquet(…)` /
+  *     `.load(…)` …, up to the end of the method chain) counts as a DV
+  *     read when the paths it reads name a tomb dir or the chain names
+  *     a DV column (`__rel`, `__ri`).
+  *   - `AnnIndex.scala` holds no DataFrameReader chain at all: table
+  *     reads go through `SnapshotLog`, and the index's assignment and
+  *     tombstone slices through the committed-file reader, so a query
+  *     plans its slices without a job.
   */
 class DeletionVectorLintSpec extends AnyFunSuite {
 
@@ -107,5 +111,24 @@ class DeletionVectorLintSpec extends AnyFunSuite {
     assert(bypasses.isEmpty,
       "DV files read outside DeletionVectors — use DeletionVectors.read:\n" +
         bypasses.mkString("\n"))
+  }
+
+  test("AnnIndex.scala reads no file through a DataFrameReader chain") {
+    // negative control: the per-query slice reads AnnIndex used to plan
+    val flagged = Seq(
+      "spark.read.option(\"basePath\", d.toString).parquet(d.toString)\n" +
+        "  .withColumn(\"__slice_v\", lit(sliceVersion(d.getName)))",
+      "spark.read.parquet(d.toString)\n  .withColumn(\"__tomb_v\", lit(sliceVersion(d.getName)))")
+    flagged.foreach(s => assert(readerChains(s).size == 1, s"not flagged:\n$s"))
+    val clean = Seq(
+      "CommittedFiles.read(spark, c.files, c.schema, parts)",
+      "SnapshotLog.readVersion(spark, root, cur).filter(p).select(col(m.idCol))")
+    clean.foreach(s => assert(readerChains(s).isEmpty, s"wrongly flagged:\n$s"))
+    val ann = mainSources.filter(_.getFileName.toString == "AnnIndex.scala")
+    assert(ann.size == 1, s"expected one AnnIndex.scala, found $ann")
+    val chains = readerChains(new String(Files.readAllBytes(ann.head), "UTF-8"))
+    assert(chains.isEmpty, "AnnIndex.scala reads files outside SnapshotLog and " +
+      "CommittedFiles:\n" + chains.map { case (line, _, text) =>
+        s"${ann.head}:$line: ${text.replaceAll("\\s+", " ").take(160)}" }.mkString("\n"))
   }
 }
