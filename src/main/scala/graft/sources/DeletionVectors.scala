@@ -48,6 +48,15 @@ private[graft] object DeletionVectors {
       .withColumn("__ri", col("_metadata.row_index"))
   }
 
+  /** A data file's DV key, `__rel`: the last two segments of its path,
+    * the value [[positions]] derives from `_metadata.file_path`. Every
+    * sidecar and carry that names single files keys them the same way.
+    */
+  def relKey(p: Path): String = p.getParent.getName + "/" + p.getName
+
+  /** [[relKey]] of a manifest FILE entry (`<dir>/<file>.parquet`). */
+  def relKey(entry: String): String = entry.split('/').takeRight(2).mkString("/")
+
   /** [[positions]] of `base` minus the rows the DV dirs `dirs` delete. */
   def liveRows(spark: SparkSession, root: String, dirs: Seq[String],
                base: DataFrame): DataFrame =

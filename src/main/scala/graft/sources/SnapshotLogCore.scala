@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.DeletionVectors.relKey
+
 /** Core of the snapshot log (part 1/5 of the round-14 facade split):
   * log/manifest/pointer primitives, the writer claim, COLUMN MAPPING
   * (rename/drop/widen via a pinned schema with immutable physical
@@ -513,21 +515,19 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
         publishLatest(spark, root, next)
         return next
       }
-      def relOf(p: Path) = p.getParent.getName + "/" + p.getName
-      def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
       // kept entries: untouched whole dirs carry as dirs; a dir holding
       // BOTH narrow and wide files dissolves into per-file carries (the
       // round-10 pruned-merge mechanics — resolved by filesFromLines,
       // refcounted by vacuum, re-packed by compactSmallFiles)
       val byDir = all.groupBy(_.getPath.getParent.getName)
       val keptEntries: Seq[String] = dirsOf(spark, root, cur).flatMap { d =>
-        if (d.contains('/') && d.endsWith(".parquet")) {
-          val rel = d.split('/').takeRight(2).mkString("/")
+        if (isFileEntry(d)) {
+          val rel = relKey(d)
           val isNarrow = byDir.get(rel.takeWhile(_ != '/')).exists(_.exists(st =>
-            relOf(st.getPath) == rel && narrowSet.contains(st.getPath.toString)))
+            relKey(st.getPath) == rel && narrowSet.contains(st.getPath.toString)))
           if (isNarrow) Nil else Seq(d)
         } else {
-          val b = baseName(d)
+          val b = entryName(d)
           val files = byDir.getOrElse(b, Seq.empty)
           val (nar, wide) = files.partition(st => narrowSet.contains(st.getPath.toString))
           if (nar.isEmpty) Seq(d)
@@ -576,11 +576,8 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
       writeDataDir(spark, folded, dataDir(root, next), bloomPhys)
       // vector rows pointing into kept entries survive as the next
       // version's own vector (the compactSmallFiles rule, file-granular)
-      val keptDirSet = keptEntries.filterNot(e =>
-        e.contains('/') && e.endsWith(".parquet")).map(baseName).toSet
-      val keptFileRels = keptEntries.filter(e =>
-        e.contains('/') && e.endsWith(".parquet"))
-        .map(_.split('/').takeRight(2).mkString("/")).toSet
+      val keptDirSet = keptEntries.filterNot(isFileEntry).map(entryName).toSet
+      val keptFileRels = keptEntries.filter(isFileEntry).map(relKey(_)).toSet
       val nextTombs =
         if (tombs.isEmpty || keptEntries.isEmpty) Nil
         else {
@@ -738,7 +735,7 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
       // pruned merges (compact_small_files folds them back into dirs)
       // and declared CHECK constraints gating every SQL DML
       numFileCarries = dirsOf(spark, root, v)
-        .count(d => d.contains('/') && d.endsWith(".parquet")),
+        .count(isFileEntry),
       numConstraints = Constraints.list(spark, root).size)
   }
 
@@ -882,6 +879,16 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
     }
     text
   }
+
+  /** A manifest entry is a whole DIR (`data_vNNN`, a `__gp=` leaf, an
+    * absolute clone dir) or a FILE entry (`<dir>/<file>.parquet` — a
+    * pruned upsert's partial carry, a converted table's adopted file).
+    */
+  private[graft] def isFileEntry(d: String): Boolean =
+    d.contains('/') && d.endsWith(".parquet")
+
+  /** The last path segment of a manifest entry (a dir entry's name). */
+  private[graft] def entryName(d: String): String = d.substring(d.lastIndexOf('/') + 1)
 
   /** Data directory NAMES of a version, base-first (own delta dir last).
     * Append-chain manifests record parents as `baseDirs` and imply their
@@ -1106,8 +1113,6 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
     require(keys.nonEmpty, "keyed rewrite needs at least one key column")
     if (morKeysOf(spark, root, cur).nonEmpty) return None
     val dirs = dirsOf(spark, root, cur)
-    def baseOf(d: String) = d.substring(d.lastIndexOf('/') + 1)
-    def isFileEntry(d: String) = d.contains('/') && d.endsWith(".parquet")
     // flat lineages only: plain version dirs and prior per-file carries.
     // Scoped leafs, clones (absolute paths), and anything else fall back.
     if (dirs.isEmpty || dirs.exists(d =>
@@ -1115,8 +1120,6 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
       return None
     val all = filesFromSidecar(spark, root, cur).getOrElse(return None)
     if (all.isEmpty) return None
-    def relOf(p: Path): String = p.getParent.getName + "/" + p.getName
-    def rel2(d: String): String = d.split('/').takeRight(2).mkString("/")
     // ---- matched files: one candidate set per key column, intersected
     // (a row matches a batch key only if EVERY key column's value does,
     // so per-column admission is conservative). Small batches probe per
@@ -1125,7 +1128,7 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
     // null-safe with table nulls, which spans cannot see — that column
     // then prunes nothing.
     val MaxPoint = 16
-    val allRel: Set[String] = all.map(st => relOf(st.getPath)).toSet
+    val allRel: Set[String] = all.map(st => relKey(st.getPath)).toSet
     // the probe's per-key shape is resolved ONCE (point values or span +
     // null flag) so the candidate computation can re-run against a MOVED
     // head at publish time — the round-11 OCC rebase re-probes with the
@@ -1159,16 +1162,16 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
           case Some(Seq()) => Set.empty[String]
           case Some(vs) => vs.map(x =>
             candidateFilesEquals(spark, root, v, kp.k, x, derivers = dv)
-              ._1.map(relOf).toSet).reduce(_ union _)
+              ._1.map(relKey(_)).toSet).reduce(_ union _)
           case None =>
             val (lo, hi) = kp.span.get
-            candidateFiles(spark, root, v, kp.k, lo, hi)._1.map(relOf).toSet
+            candidateFiles(spark, root, v, kp.k, lo, hi)._1.map(relKey(_)).toSet
         }
       }.reduce(_ intersect _)
     }
     val matchedRel: Set[String] = candidatesOn(cur, allRel)
     if (matchedRel.size >= all.size) return None // nothing pruned
-    val matchedPaths = all.filter(st => matchedRel.contains(relOf(st.getPath)))
+    val matchedPaths = all.filter(st => matchedRel.contains(relKey(st.getPath)))
       .map(_.getPath.toString)
     // ---- the touched slice: matched files only, deletion vectors and
     // column mapping applied exactly like [[readVersion]] would
@@ -1268,7 +1271,7 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
             !isFileEntry(d) && (d.contains('/') || !d.startsWith("data_v"))))
           return None
         val allH = filesFromSidecar(spark, root, h).getOrElse(return None)
-        val allRelH = allH.map(st => relOf(st.getPath)).toSet
+        val allRelH = allH.map(st => relKey(st.getPath)).toSet
         if (!matchedRel.subsetOf(allRelH)) return None
         if (!candidatesOn(h, allRelH).subsetOf(matchedRel)) return None
         val newTombs = tombDirsOf(spark, root, h).filterNot(tombs.contains)
@@ -1304,10 +1307,10 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
       val byDirBase = pubAll.groupBy(_.getPath.getParent.getName)
       val carriedEntries: Seq[String] = pubDirs.flatMap { d =>
         if (isFileEntry(d)) {
-          if (matchedRel.contains(rel2(d))) Nil else Seq(d)
+          if (matchedRel.contains(relKey(d))) Nil else Seq(d)
         } else {
-          val members = byDirBase.getOrElse(baseOf(d), Seq.empty)
-          val (m, c) = members.partition(st => matchedRel.contains(relOf(st.getPath)))
+          val members = byDirBase.getOrElse(entryName(d), Seq.empty)
+          val (m, c) = members.partition(st => matchedRel.contains(relKey(st.getPath)))
           if (m.isEmpty) Seq(d)
           else c.map(st => d + "/" + st.getPath.getName)
         }
@@ -1315,7 +1318,7 @@ private[sources] trait SnapshotLogCore { self: SnapshotLog.type =>
       // fully-carried dirs keep their `d` listing mark; matched files'
       // span/bloom/listing/null-count lines drop; the rest carries
       // verbatim (the matchedRel closure is O(matched), scale-safe)
-      val carriedDirBases = carriedEntries.filterNot(isFileEntry).map(baseOf).toSet
+      val carriedDirBases = carriedEntries.filterNot(isFileEntry).map(entryName).toSet
       val carry = sidecarCarry(spark, root, base).filter { line =>
         val key = StatsEval.unesc(line.split("\t", -1)(0))
         if (key.endsWith("/")) carriedDirBases.contains(key.stripSuffix("/"))

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.DeletionVectors.relKey
+
 /** Merge-on-read + spec evolution + maintenance verbs (part 3/5):
   * partition SPEC EVOLUTION with migrate-on-touch, upsertMor/
   * mergeMor/updateMor and shadowing resolution, compactions
@@ -155,16 +157,13 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
     fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  private[sources] def leafBaseName(d: String): String =
-    d.substring(d.lastIndexOf('/') + 1)
-
   /** Refuse a pack whose inputs have two SPECS rendering the same leaf
     * name — the merged output leaf would have no single recordable
     * spec (migration via merges converges them first).
     */
   private[sources] def requireNoSpecNameClash(specByDir: Map[String, String],
                                      what: String): Unit = {
-    val clash = specByDir.groupBy { case (d, _) => leafBaseName(d) }
+    val clash = specByDir.groupBy { case (d, _) => entryName(d) }
       .filter(_._2.values.toSet.size > 1)
     require(clash.isEmpty,
       s"scoped $what: leaf name collision across specs: ${clash.keySet}")
@@ -181,7 +180,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
                                       writtenLeafs: Seq[String],
                                       partCol: String,
                                       next: Long): Map[String, String] = {
-    val baseSpec = specByDir.map { case (d, sp) => leafBaseName(d) -> sp }
+    val baseSpec = specByDir.map { case (d, sp) => entryName(d) -> sp }
     val overrides = writtenLeafs.flatMap { l =>
       baseSpec.get(l).filter(_ != partCol)
         .map(sp => (dataDirName(next) + "/" + l) -> sp)
@@ -221,7 +220,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
 
   private[sources] def leafDirVersion(d: String): Option[Long] = {
     val dirPart = d.substring(0, math.max(d.lastIndexOf('/'), 0))
-    val base = dirPart.substring(dirPart.lastIndexOf('/') + 1)
+    val base = entryName(dirPart)
     scala.util.Try(base.stripPrefix("data_v").toLong).toOption
       .filter(_ => base.startsWith("data_v"))
   }
@@ -1220,13 +1219,11 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
             .map { case (b, ss) => b -> ss.map(_.getLen).sum }
           // per-file carry entries (pruned keyed upserts) size as the
           // one file they name — packing them defragments the manifest
-          val byRel = sts.map(st =>
-            (st.getPath.getParent.getName + "/" + st.getPath.getName)
-              -> st.getLen).toMap
+          val byRel = sts.map(st => relKey(st.getPath) -> st.getLen).toMap
           dirsOf(spark, root, cur).map(d =>
-            if (d.contains('/') && d.endsWith(".parquet"))
-              d -> byRel.getOrElse(d.split('/').takeRight(2).mkString("/"), 0L)
-            else d -> byDir.getOrElse(d.substring(d.lastIndexOf('/') + 1), 0L))
+            if (isFileEntry(d))
+              d -> byRel.getOrElse(relKey(d), 0L)
+            else d -> byDir.getOrElse(entryName(d), 0L))
         case None => dirsOf(spark, root, cur).map { d =>
           val it = f.listFiles(new Path(rootPath, d), true)
           var tot = 0L
@@ -1278,10 +1275,9 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       // vector rows for kept dirs survive as the new version's own
       // vector; kept per-file carries match on their full rel key
       val (keptFiles, keptDirs) = kept.map(_._1)
-        .partition(d => d.contains('/') && d.endsWith(".parquet"))
+        .partition(isFileEntry)
       val keptDirSet = keptDirs.toSet
-      val keptFileRels = keptFiles
-        .map(_.split('/').takeRight(2).mkString("/")).toSet
+      val keptFileRels = keptFiles.map(relKey(_)).toSet
       val nextTombs =
         if (tombs.isEmpty || kept.isEmpty) Nil
         else {
@@ -1399,13 +1395,12 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
     import org.apache.spark.sql.functions.{col, substring_index}
     val rootPath = new Path(root.replaceAll("/+$", ""))
     val f = fs(spark, rootPath)
-    def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
     val partCol = partColOf(spark, root, cur).getOrElse(
       throw new IllegalStateException(
         s"scoped lineage at $root v$cur carries no partition column"))
     val spec = parseGpSpec(partCol)
     val dirs = dirsOf(spark, root, cur)
-    require(dirs.nonEmpty && dirs.forall(baseName(_).startsWith(GpPrefix)),
+    require(dirs.nonEmpty && dirs.forall(entryName(_).startsWith(GpPrefix)),
       "scoped compaction needs a fully scoped head — run upsertScoped " +
       "once to migrate a mixed table into the scoped layout")
     // column-mapped lineages work (round 13, mirroring purgeScoped):
@@ -1417,7 +1412,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       case Some(sts) =>
         val byDir = sts.groupBy(_.getPath.getParent.getName)
         dirs.map { d =>
-          val ss = byDir.getOrElse(baseName(d), Seq.empty)
+          val ss = byDir.getOrElse(entryName(d), Seq.empty)
           (d, ss.map(_.getLen).sum, ss.size)
         }
       case None =>
@@ -1444,7 +1439,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
     val (small, kept) =
       if (rewriteAll) (sized, Seq.empty[(String, Long, Int)])
       else sized.partition { case (d, bytes, n) =>
-        bytes < targetBytes && (n > 1 || tombLeafBases.contains(baseName(d)))
+        bytes < targetBytes && (n > 1 || tombLeafBases.contains(entryName(d)))
       }
     if (small.isEmpty) return cur // already compact per leaf
     val next = cur + 1L
@@ -1519,14 +1514,14 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       partitionBy = Seq(GpCol))
     val writtenLeafs = fs(spark, dd).listStatus(dd).map(_.getPath.getName)
       .filter(_.startsWith(GpPrefix)).sorted.toSeq
-    val smallBases = small.map(t => baseName(t._1)).toSet
+    val smallBases = small.map(t => entryName(t._1)).toSet
     // subset, not equality: a leaf whose rows were all tombstoned
     // legitimately packs to nothing
     require(writtenLeafs.toSet.subsetOf(smallBases),
       s"scoped compaction rendering drifted: wrote $writtenLeafs beyond " +
       s"$smallBases — aborting before publish")
     val newDirs = kept.map(_._1) ++ writtenLeafs.map(dataDirName(next) + "/" + _)
-    val keptBases = kept.map(t => baseName(t._1)).toSet
+    val keptBases = kept.map(t => entryName(t._1)).toSet
     val parentCarry = sidecarCarry(spark, root, cur)
     val carry = parentCarry.filter { line =>
       val key = StatsEval.unesc(line.split("\t", -1)(0))
@@ -1622,9 +1617,6 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
         return purgeScopedLocked(spark, root, cur, statsCols, bloomCols)
       val rootPath = new Path(root.replaceAll("/+$", ""))
       val dirs = dirsOf(spark, root, cur)
-      def isFileEntry(d: String) = d.contains('/') && d.endsWith(".parquet")
-      def baseOf(d: String) = d.substring(d.lastIndexOf('/') + 1)
-      def rel2(d: String) = d.split('/').takeRight(2).mkString("/")
       require(dirs.nonEmpty && dirs.forall(d =>
         isFileEntry(d) || (!d.contains('/') && d.startsWith("data_v"))),
         s"purge at $root: the head carries foreign/clone entries — " +
@@ -1649,8 +1641,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
           }
         }
       }
-      def relOf(p: Path): String = p.getParent.getName + "/" + p.getName
-      val matchedRel = dvRels.intersect(allFiles.map(relOf).toSet)
+      val matchedRel = dvRels.intersect(allFiles.map(relKey(_)).toSet)
       val next = cur + 1L
       val stamp = batchIdOf(spark, root, cur).getOrElse(-1L)
       val pinJson = rawSchemaJson(spark, root, cur)
@@ -1666,7 +1657,7 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
         return next
       }
       val matchedPaths = allFiles
-        .filter(p => matchedRel.contains(relOf(p))).map(_.toString)
+        .filter(p => matchedRel.contains(relKey(p))).map(_.toString)
       // PHYSICAL space end to end: vectors are positional, the pinned
       // physical schema null-fills pre-evolution files, and the written
       // files spell columns exactly like the carried ones. Row-tracked
@@ -1692,14 +1683,14 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       val byDirBase = allFiles.groupBy(_.getParent.getName)
       val carriedEntries: Seq[String] = dirs.flatMap { d =>
         if (isFileEntry(d)) {
-          if (matchedRel.contains(rel2(d))) Nil else Seq(d)
+          if (matchedRel.contains(relKey(d))) Nil else Seq(d)
         } else {
-          val members = byDirBase.getOrElse(baseOf(d), Seq.empty)
-          val (m, c) = members.partition(p => matchedRel.contains(relOf(p)))
+          val members = byDirBase.getOrElse(entryName(d), Seq.empty)
+          val (m, c) = members.partition(p => matchedRel.contains(relKey(p)))
           if (m.isEmpty) Seq(d) else c.map(p => d + "/" + p.getName)
         }
       }
-      val carriedDirBases = carriedEntries.filterNot(isFileEntry).map(baseOf).toSet
+      val carriedDirBases = carriedEntries.filterNot(isFileEntry).map(entryName).toSet
       val carry = sidecarCarry(spark, root, cur).filter { line =>
         val key = StatsEval.unesc(line.split("\t", -1)(0))
         if (key.endsWith("/")) carriedDirBases.contains(key.stripSuffix("/"))
@@ -1735,20 +1726,19 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
                                 bloomCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{col, substring_index}
     val rootPath = new Path(root.replaceAll("/+$", ""))
-    def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
     val partCol = partColOf(spark, root, cur).getOrElse(
       throw new IllegalStateException(
         s"scoped lineage at $root v$cur carries no partition column"))
     val spec = parseGpSpec(partCol)
     val dirs = dirsOf(spark, root, cur)
-    require(dirs.nonEmpty && dirs.forall(baseName(_).startsWith(GpPrefix)),
+    require(dirs.nonEmpty && dirs.forall(entryName(_).startsWith(GpPrefix)),
       "scoped purge needs a fully scoped head — run upsertScoped once " +
       "to migrate a mixed table into the scoped layout")
     val tombs = tombDirsOf(spark, root, cur) // nonEmpty: caller checked
     val tombLeafBases: Set[String] = DeletionVectors.read(spark, root, tombs)
       .select(substring_index(col("__rel"), "/", 1)).distinct()
       .collect().map(_.getString(0)).toSet
-    val (matched, kept) = dirs.partition(d => tombLeafBases.contains(baseName(d)))
+    val (matched, kept) = dirs.partition(d => tombLeafBases.contains(entryName(d)))
     val next = cur + 1L
     val stamp = batchIdOf(spark, root, cur).getOrElse(-1L)
     val pinJson = rawSchemaJson(spark, root, cur)
@@ -1805,14 +1795,14 @@ private[sources] trait SnapshotLogMorSpec { self: SnapshotLog.type =>
       partitionBy = Seq(GpCol))
     val writtenLeafs = fs(spark, dd).listStatus(dd).map(_.getPath.getName)
       .filter(_.startsWith(GpPrefix)).sorted.toSeq
-    val matchedBases = matched.map(baseName).toSet
+    val matchedBases = matched.map(entryName).toSet
     // subset, not equality: a leaf whose rows were all tombstoned
     // legitimately purges to nothing
     require(writtenLeafs.toSet.subsetOf(matchedBases),
       s"scoped purge rendering drifted: wrote $writtenLeafs beyond " +
       s"$matchedBases — aborting before publish")
     val newDirs = kept ++ writtenLeafs.map(dataDirName(next) + "/" + _)
-    val keptBases = kept.map(baseName).toSet
+    val keptBases = kept.map(entryName).toSet
     val carry = sidecarCarry(spark, root, cur).filter { line =>
       val key = StatsEval.unesc(line.split("\t", -1)(0))
       keptBases.contains(key.substring(0, math.max(key.indexOf('/'), 0)))

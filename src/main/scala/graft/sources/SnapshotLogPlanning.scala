@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.DeletionVectors.relKey
+
 /** Read planning + metadata answers + retention (part 5/5): the
   * sidecar-backed SkippingFileIndex and readPruned, the distributed
   * checkpoint prune (min-side verdict shipping, round 14),
@@ -139,15 +141,13 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
       case _ => ()
     }
     val dirs = dirsOf(spark, root, v)
-    def base(d: String) = d.substring(d.lastIndexOf('/') + 1)
     // FILE entries ("data_vNNN/part-….parquet", written by the pruned
     // keyed upsert when a dir is only partially carried) resolve from
     // their own `f` line — their dir is deliberately NOT fully listed,
     // so no `d` marker is expected for it
-    def isFileEntry(d: String) = d.contains('/') && d.endsWith(".parquet")
     def dirPartBase(d: String) = {
       val dp = d.substring(0, d.lastIndexOf('/'))
-      dp.substring(dp.lastIndexOf('/') + 1)
+      entryName(dp)
     }
     val (fileEntries, dirEntries) = dirs.partition(isFileEntry)
     // dir-part keys must be unambiguous: flat dirs embed their version,
@@ -155,23 +155,23 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
     // disjoint from clone-local ones — but verify, never assume. A file
     // entry's dir must NOT also appear as a whole-dir entry (that would
     // double-count the file).
-    val dirBases = dirEntries.map(base)
+    val dirBases = dirEntries.map(entryName)
     if (dirs.isEmpty || dirBases.distinct.size != dirBases.size ||
-        !dirEntries.forall(d => listed.contains(base(d))) ||
-        fileEntries.map(f => (dirPartBase(f), base(f))).distinct.size != fileEntries.size ||
+        !dirEntries.forall(d => listed.contains(entryName(d))) ||
+        fileEntries.map(f => (dirPartBase(f), entryName(f))).distinct.size != fileEntries.size ||
         fileEntries.exists(fe => dirBases.contains(dirPartBase(fe))) ||
         !fileEntries.forall(fe => byDir.getOrElse(dirPartBase(fe), Vector.empty)
-          .exists(_._1 == base(fe)))) None
+          .exists(_._1 == entryName(fe)))) None
     else {
       val rootPath = new Path(root.replaceAll("/+$", ""))
       Some(dirs.flatMap { d =>
         if (isFileEntry(d)) {
-          val (_, len, mtime) = byDir(dirPartBase(d)).find(_._1 == base(d)).get
+          val (_, len, mtime) = byDir(dirPartBase(d)).find(_._1 == entryName(d)).get
           Seq(new org.apache.hadoop.fs.FileStatus(
             len, false, 1, 128L * 1024 * 1024, mtime, new Path(rootPath, d)))
         } else {
           val dp = new Path(rootPath, d)
-          byDir.getOrElse(base(d), Vector.empty).map { case (name, len, mtime) =>
+          byDir.getOrElse(entryName(d), Vector.empty).map { case (name, len, mtime) =>
             new org.apache.hadoop.fs.FileStatus(
               len, false, 1, 128L * 1024 * 1024, mtime, new Path(dp, name))
           }
@@ -1193,7 +1193,7 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
           case InMemSpans(spans, nulls) =>
             lastPlanPrune = "inmem"
             files.filter { st =>
-              val rel = st.getPath.getParent.getName + "/" + st.getPath.getName
+              val rel = relKey(st.getPath)
               val spanOf: String => Option[(String, String, String)] = c =>
                 spans.get(rel).flatMap(_.get(c)).orElse(dirSpanOf(st)(c))
               val nullsOf: String => Option[(Long, Long)] = c =>
@@ -1213,7 +1213,7 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
             lastPlanPrune =
               (if (keptSide) "pq-kept:" else "pq-pruned:") + keys.size
             files.filter { st =>
-              val rel = st.getPath.getParent.getName + "/" + st.getPath.getName
+              val rel = relKey(st.getPath)
               (if (keptSide) keys.contains(rel) else !keys.contains(rel)) &&
               bucketKeeps(st) &&
               preds.forall(p =>
@@ -1750,7 +1750,7 @@ private[sources] trait SnapshotLogPlanning { self: SnapshotLog.type =>
           val inner = retainedDirs.filter(_.startsWith(d + "/"))
           if (inner.isEmpty) f.delete(new Path(rootPath, d), true)
           else {
-            val keepNames = inner.map(e => e.substring(e.lastIndexOf('/') + 1))
+            val keepNames = inner.map(entryName)
             val dp = new Path(rootPath, d)
             if (f.exists(dp)) f.listStatus(dp).foreach { st =>
               if (st.isFile && !keepNames.contains(st.getPath.getName))

@@ -387,6 +387,29 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     r
   }
 
+  /** Column mapping on a scoped lineage (round 11), over the schema pin
+    * of the version a scoped commit reads: a renamed non-partition
+    * column translates at the slice read (physical files → logical
+    * merge) and at the staged write (logical merge → physical files),
+    * exactly the flat-path rule. The partition column itself stays
+    * rename-refused (it names directories), so spec rendering is
+    * mapping-blind. A pinned slice read DECLARES the physical schema (a
+    * widened non-partition column's narrow old leaf files upcast under
+    * the wide pin, never schema-roulette); an unpinned one infers.
+    */
+  private final class ScopedPin(spark: SparkSession,
+                                pin: Option[org.apache.spark.sql.types.StructType]) {
+    def toLogical(df: DataFrame): DataFrame =
+      pin.map(fromPhysicalSelect(df, _)).getOrElse(df)
+    def toPhys(df: DataFrame): DataFrame =
+      pin.map(toPhysicalDf(df, _)).getOrElse(df)
+    def readSlice(paths: Seq[String]): DataFrame = pin match {
+      case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
+      case None     => spark.read.parquet(paths: _*)
+    }
+    val physMap: Map[String, String] = pin.map(renameMap).getOrElse(Map.empty)
+  }
+
   private[sources] def scopedUnderClaim(spark: SparkSession, root: String,
                                batch: DataFrame, keys: Seq[String],
                                partitionCol: String, statsCols: Seq[String],
@@ -425,25 +448,8 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       obs = o
       val rootPath = new Path(root.replaceAll("/+$", ""))
       val cur = currentVersion(spark, root)
-      // round 11: COLUMN MAPPING on scoped lineages — a renamed
-      // non-partition column's pin translates at the slice read
-      // (physical files → logical merge) and at the staged write
-      // (logical merge → physical files), exactly the flat-path rule;
-      // the partition column itself stays rename-refused (it names
-      // directories), so spec rendering is mapping-blind
-      val pin = cur.flatMap(schemaOf(spark, root, _))
-      def toLogical(df: DataFrame): DataFrame =
-        pin.map(fromPhysicalSelect(df, _)).getOrElse(df)
-      def toPhys(df: DataFrame): DataFrame =
-        pin.map(toPhysicalDf(df, _)).getOrElse(df)
-      // the slice read DECLARES the pinned physical schema (the flat
-      // paths' rule): a widened non-partition column's narrow old leaf
-      // files must upcast under the wide pin, never schema-roulette
-      def readSlice(paths: Seq[String]): DataFrame = pin match {
-        case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-        case None     => spark.read.parquet(paths: _*)
-      }
-      val physMap = pin.map(renameMap).getOrElse(Map.empty[String, String])
+      val pinned = new ScopedPin(spark, cur.flatMap(schemaOf(spark, root, _)))
+      import pinned._
       // round 10: LTZ days() components get their rendering zone PINNED
       // (inherit the lineage's pin; pin the session zone at bootstrap)
       val spec = normalizeGpSpec(spark, spec0, batch,
@@ -463,9 +469,8 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         touchedRaw.map(v => GpPrefix + ExternalCatalogUtils.escapePathName(v))
       val next = cur.getOrElse(0L) + 1L
       val parentDirs = cur.map(dirsOf(spark, root, _)).getOrElse(Seq.empty)
-      def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
       val allScoped =
-        parentDirs.nonEmpty && parentDirs.forall(baseName(_).startsWith(GpPrefix))
+        parentDirs.nonEmpty && parentDirs.forall(entryName(_).startsWith(GpPrefix))
       // a caller's spec must BE the lineage's current spec — a drifted
       // spec would render touched names no existing leaf matches and
       // silently duplicate keys (hardened round 13, when specs became
@@ -507,7 +512,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
             else {
               val names = vals.map(v =>
                 GpPrefix + ExternalCatalogUtils.escapePathName(v))
-              ds.keys.toSeq.filter(d => names.contains(baseName(d)))
+              ds.keys.toSeq.filter(d => names.contains(entryName(d)))
             }
           } else ds.keys.toSeq // sources absent from the batch — migrate all
         }
@@ -532,7 +537,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       val oldTouchedSet = oldTouched.toSet
       val (untouched, replaced) =
         if (allScoped) parentDirs.partition(d =>
-          !touchedNamesAll.contains(baseName(d)) && !oldTouchedSet.contains(d))
+          !touchedNamesAll.contains(entryName(d)) && !oldTouchedSet.contains(d))
         else (Seq.empty[String], parentDirs)
       // deletion vectors apply to the touched slice too, or a merge
       // would resurrect rows a prior tombstoneDelete removed
@@ -629,7 +634,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       // stats: fresh footer-derived lines for the delta leafs; untouched
       // partitions' lines carry forward verbatim (keyed by leaf basename,
       // unique within a version — one leaf per partition value)
-      val untouchedBase = untouched.map(baseName).toSet
+      val untouchedBase = untouched.map(entryName).toSet
       val carry = cur.map(c =>
         sidecarCarry(spark, root, c).filter { line =>
           val key = StatsEval.unesc(line.split("\t", -1)(0))
@@ -842,100 +847,50 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     * data files; [[vacuum]] reference-counts the vector dirs like data
     * dirs. Contrast [[deleteByKey]], which stays the O(table) rewrite
     * path.
+    *
+    * One body with [[tombstoneDeleteOcc]]: the same stage and publish,
+    * run with the fail-fast table claim held across both, so no writer
+    * commits between the scan and the publish.
     */
   def tombstoneDelete(spark: SparkSession, root: String,
-                      tombstones: DataFrame, keys: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.col
-    require(keys.nonEmpty && keys.forall(tombstones.columns.contains),
-      s"keys $keys must be columns of the tombstone frame")
-    withClaim(spark, root) { f =>
+                      tombstones: DataFrame, keys: Seq[String]): Long =
+    withClaim(spark, root) { _ =>
       recoverOrphans(spark, root)
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed version at $root"))
-      val next = cur + 1L
-      val rootPath = new Path(root.replaceAll("/+$", ""))
-      // one key-pruned scan (file-manifest, schema declared) finds the
-      // positions, minus those prior vectors carry (round 9: a duplicate
-      // would re-emit the row as a SECOND delete through the CDC
-      // surfaces; it was also dead weight the next compaction had to fold)
-      val hits = doomedPositions(spark, root, cur, { b =>
-        require(keys.forall(b.columns.contains),
-          s"keys $keys must be columns of the table")
-        b.join(tombstones.select(keys.map(col(_)): _*).distinct(),
-          keys, "left_semi")
-      })
-      val td = new Path(rootPath, tombDirName(next))
-      writeTombstones(spark, hits, td)
-      // the data-file set is untouched, so the parent's sidecar carries
-      // verbatim (stats prune files; the vector prunes rows afterwards)
-      val carry = sidecarCarry(spark, root, cur)
-      val stack = writeStats(spark, root, next, Nil, carry)
-      writeManifestDirs(spark, root, next, dirsOf(spark, root, cur),
-        batchId = batchIdOf(spark, root, cur).getOrElse(-1L),
-        tombDirs = tombDirsOf(spark, root, cur) :+ tombDirName(next),
-        kind = "delete",
-        partCol = partColOf(spark, root, cur).getOrElse(""),
-        morKeys = morKeysOf(spark, root, cur),
-        schemaJson = rawSchemaJson(spark, root, cur),
-        statsStack = stack)
-      publishLatest(spark, root, next)
-      next
+      publishTombstoneLocked(spark, root,
+        stageTombstoneOcc(spark, root, tombstones, keys))
     }
-  }
 
   /** [[tombstoneDelete]] with an arbitrary row predicate instead of a
-    * tombstone-key frame — the SQL `DELETE FROM t WHERE p` lowering
-    * (GraftSqlRule). `mkCond` receives the positional base scan (the
-    * current snapshot with `_metadata` resolvable) and returns the
+    * tombstone-key frame. `mkCond` receives the positional base scan
+    * (the current snapshot with `_metadata` resolvable) and returns the
     * filter; matching (file, row) positions land in the same O(deleted
     * rows) deletion-vector sidecar, zero data files rewritten. Running
     * the predicate directly on the scan — rather than routing through a
     * key semi-join — keeps NULL-valued rows deletable (`p` decides, not
-    * key equality) and costs one pruned scan.
+    * key equality) and costs one pruned scan. One body with
+    * [[tombstoneDeleteWhereOcc]] (the SQL `DELETE FROM t WHERE p`
+    * lowering), the claim held across the scan.
     */
   def tombstoneDeleteWhere(spark: SparkSession, root: String,
-                           mkCond: DataFrame => org.apache.spark.sql.Column): Long = {
-    withClaim(spark, root) { f =>
+                           mkCond: DataFrame => org.apache.spark.sql.Column): Long =
+    withClaim(spark, root) { _ =>
       recoverOrphans(spark, root)
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed version at $root"))
-      val next = cur + 1L
-      val rootPath = new Path(root.replaceAll("/+$", ""))
-      val hits = doomedPositions(spark, root, cur, b => b.filter(mkCond(b)))
-      val td = new Path(rootPath, tombDirName(next))
-      writeTombstones(spark, hits, td)
-      val carry = sidecarCarry(spark, root, cur)
-      val stack = writeStats(spark, root, next, Nil, carry)
-      writeManifestDirs(spark, root, next, dirsOf(spark, root, cur),
-        batchId = batchIdOf(spark, root, cur).getOrElse(-1L),
-        tombDirs = tombDirsOf(spark, root, cur) :+ tombDirName(next),
-        kind = "delete",
-        partCol = partColOf(spark, root, cur).getOrElse(""),
-        morKeys = morKeysOf(spark, root, cur),
-        schemaJson = rawSchemaJson(spark, root, cur),
-        statsStack = stack)
-      publishLatest(spark, root, next)
-      next
+      publishTombstoneLocked(spark, root,
+        stageTombstoneWhereOcc(spark, root, mkCond))
     }
-  }
 
-  /** A deletion-vector DML staged OUTSIDE the writer claim (round 10 —
-    * OCC for row-level DML, the appendOcc stage/publish split): `base`
-    * is the version the position scan ran against, `stagingDir` holds
-    * the clustered vector, `touchedRels` the O(touched files) rel keys
-    * it references.
+  /** A staged deletion-vector DELETE: `base` is the version the
+    * position scan ran against, `stagingDir` holds the clustered vector.
     */
-  private[graft] case class StagedDelete(base: Long, stagingDir: String,
-                                         touchedRels: Set[String])
+  private[graft] case class StagedDelete(base: Long, stagingDir: String)
 
-  /** Stage a deletion-vector DELETE with NO lock held: the position
-    * scan (key-pruned through the skipping stats) and the vector write
-    * — the expensive parts of a DELETE — run against the current head
-    * while other writers proceed. [[publishTombstoneOcc]] rebases the
-    * result under a short claimed section. This is the Delta conflict
-    * model for row-level DML: the old [[tombstoneDelete]] holds the
-    * table claim across its whole scan, serializing every writer
-    * behind one long DELETE.
+  /** Stage a deletion-vector DELETE: the position scan (key-pruned
+    * through the skipping stats) and the vector write — the expensive
+    * parts of a DELETE — run against the current head. Staged with no
+    * lock held ([[tombstoneDeleteOcc]]), other writers proceed meanwhile
+    * and [[publishTombstoneOcc]] rebases the result under a short
+    * claimed section — the Delta conflict model for row-level DML.
+    * [[tombstoneDelete]] stages with the claim already held.
     */
   def stageTombstoneOcc(spark: SparkSession, root: String,
                         tombstones: DataFrame,
@@ -952,31 +907,32 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
   }
 
   /** [[stageTombstoneOcc]] for an arbitrary row predicate — the SQL
-    * `DELETE WHERE p` shape ([[tombstoneDeleteWhere]]'s scan, staged
-    * with NO lock held so a long DELETE never serializes writers).
+    * `DELETE WHERE p` shape ([[tombstoneDeleteWhere]]'s scan).
     */
   def stageTombstoneWhereOcc(spark: SparkSession, root: String,
       mkCond: DataFrame => org.apache.spark.sql.Column): StagedDelete =
     stageTombstoneCore(spark, root)(base => base.filter(mkCond(base)))
 
-  /** Shared stage half of the deletion-vector OCC split: run the
-    * caller's row selection over the current head's raw positional
-    * scan, dedup against existing vectors, and write the clustered
-    * vector to a writer-unique staging dir — all lock-free.
+  /** Shared stage half of the deletion-vector DELETE: run the caller's
+    * row selection over the current head's raw positional scan, dedup
+    * against existing vectors, and write the clustered vector to a
+    * writer-unique staging dir (removed again if the write fails).
     */
   private[sources] def stageTombstoneCore(spark: SparkSession, root: String)
       (select: DataFrame => DataFrame): StagedDelete = {
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
     val rootPath = new Path(root.replaceAll("/+$", ""))
+    // one key-pruned scan (file-manifest, schema declared) finds the
+    // positions, minus those prior vectors carry (round 9: a duplicate
+    // would re-emit the row as a SECOND delete through the CDC
+    // surfaces; it was also dead weight the next compaction had to fold)
     val hits = doomedPositions(spark, root, cur, select)
-    val staging = "tomb_u" + java.util.UUID.randomUUID.toString.replace("-", "")
-    writeTombstones(spark, hits, new Path(rootPath, staging))
-    // O(touched files): the rel keys this vector references — the
-    // publish-side disjointness check needs exactly this set
-    val touched = DeletionVectors.read(spark, root, Seq(staging))
-      .select("__rel").distinct().collect().map(_.getString(0)).toSet
-    StagedDelete(cur, staging, touched)
+    val staging = new Path(rootPath,
+      "tomb_u" + java.util.UUID.randomUUID.toString.replace("-", ""))
+    try writeTombstones(spark, hits, staging)
+    catch { case e: Throwable => fs(spark, rootPath).delete(staging, true); throw e }
+    StagedDelete(cur, staging.getName)
   }
 
   /** [[tombstoneDeleteWhere]] through the OCC split: the predicate
@@ -989,34 +945,26 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     publishTombstoneOcc(spark, root,
       stageTombstoneWhereOcc(spark, root, mkCond))
 
-  /** Publish a staged deletion vector, REBASING over commits that
-    * landed since the stage iff every one of them is file-disjoint
-    * from the staged positions (the Delta conflict rule):
+  /** The file-disjoint rebase validation both row-level DML publishes
+    * run (the Delta conflict rule):
     *
     *  - every interleaved commit must KEEP all of the staged base's
     *    data entries (appends, DV deletes and MoR updates do; a
     *    rewrite/compaction/pruned-upsert that replaced a file our
     *    positions reference would make them dangle), and
     *  - every interleaved DELETION VECTOR must reference files
-    *    disjoint from ours (an overlap could re-record a position the
-    *    stage-side dedup ran too early to see — a double death on the
-    *    CDC surfaces).
+    *    disjoint from those of the staged vector `stagingDir` (an
+    *    overlap could re-record a position the stage-side dedup ran too
+    *    early to see — a double death on the CDC surfaces). The file
+    *    sets are compared only when such a vector exists.
     *
-    * Anything else aborts loudly with the staging dir removed and the
-    * table untouched — re-run against the new head. Rows appended
-    * AFTER the stage are not seen by the staged scan (snapshot
-    * isolation at the staged base — Delta's WriteSerializable DELETE
-    * contract).
-    */
-  /** The file-disjoint rebase validation both OCC row-level DML
-    * publishes run: every interleaved commit must have KEPT all of the
-    * staged base's data entries, and every interleaved deletion vector
-    * must reference files disjoint from the staged positions. `abort`
-    * cleans up and throws.
+    * Rows appended AFTER the stage are not seen by the staged scan
+    * (snapshot isolation at the staged base — Delta's WriteSerializable
+    * DELETE contract). `abort` cleans up and throws.
     */
   private[sources] def validateDisjointRebase(spark: SparkSession, root: String,
                                      base: Long, head: Long,
-                                     touchedRels: Set[String],
+                                     stagingDir: String,
                                      abort: String => Nothing): Unit = {
     val baseDirsSet = dirsOf(spark, root, base).toSet
     val baseTombs = tombDirsOf(spark, root, base)
@@ -1028,10 +976,10 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     }
     val newTombs = tombDirsOf(spark, root, head).drop(baseTombs.size)
     if (newTombs.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      val overlapping = DeletionVectors.read(spark, root, newTombs)
-        .select("__rel").distinct()
-        .filter(col("__rel").isInCollection(touchedRels))
+      def rels(dirs: Seq[String]) =
+        DeletionVectors.read(spark, root, dirs).select("__rel").distinct()
+      val overlapping = rels(newTombs)
+        .join(rels(Seq(stagingDir)), Seq("__rel"), "left_semi")
         .limit(1).count() > 0
       if (overlapping)
         abort(s"a deletion vector landed since v$base on a file this " +
@@ -1039,45 +987,66 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     }
   }
 
+  /** Abort a `what` OCC publish: remove its staging dirs (the table is
+    * untouched) and throw.
+    */
+  private[sources] def abortStaged(spark: SparkSession, root: String, what: String,
+                                   stagingDirs: Seq[String])(why: String): Nothing = {
+    val rootPath = new Path(root.replaceAll("/+$", ""))
+    stagingDirs.filter(_.nonEmpty)
+      .foreach(d => fs(spark, rootPath).delete(new Path(rootPath, d), true))
+    throw new java.util.ConcurrentModificationException(
+      s"$what OCC commit aborted: $why — re-run against the new head")
+  }
+
+  /** Publish a staged deletion vector under a bounded-wait claim,
+    * REBASING over commits that landed since the stage iff
+    * [[validateDisjointRebase]] admits them. Anything else aborts
+    * loudly with the staging dir removed and the table untouched —
+    * re-run against the new head.
+    */
   def publishTombstoneOcc(spark: SparkSession, root: String,
-                          staged: StagedDelete): Long = {
+                          staged: StagedDelete): Long =
     withClaimWait(spark, root) {
-      val rootPath = new Path(root.replaceAll("/+$", ""))
-      val f = fs(spark, rootPath)
-      val stagingPath = new Path(rootPath, staged.stagingDir)
-      def abort(why: String): Nothing = {
-        f.delete(stagingPath, true)
-        throw new java.util.ConcurrentModificationException(
-          s"deletion-vector OCC commit aborted: $why — re-run against " +
-          "the new head")
-      }
       recoverOrphans(spark, root)
-      val head = currentVersion(spark, root).getOrElse(
-        abort("table has no committed version"))
-      val next = head + 1L
-      validateDisjointRebase(spark, root, staged.base, head,
-        staged.touchedRels, abort)
-      if (!f.exists(stagingPath))
-        abort("staging dir missing (vacuumed or already published)")
-      if (!f.rename(stagingPath, new Path(rootPath, tombDirName(next))))
-        throw new IllegalStateException(
-          s"could not move staged $stagingPath into ${tombDirName(next)}")
-      // the data-file set is untouched by this commit: the HEAD's
-      // sidecar carries verbatim, the head's dirs and vectors carry,
-      // ours appends to the vector list
-      val carry = sidecarCarry(spark, root, head)
-      val stack = writeStats(spark, root, next, Nil, carry)
-      writeManifestDirs(spark, root, next, dirsOf(spark, root, head),
-        batchId = batchIdOf(spark, root, head).getOrElse(-1L),
-        tombDirs = tombDirsOf(spark, root, head) :+ tombDirName(next),
-        kind = "delete",
-        partCol = partColOf(spark, root, head).getOrElse(""),
-        morKeys = morKeysOf(spark, root, head),
-        schemaJson = rawSchemaJson(spark, root, head),
-        statsStack = stack)
-      publishLatest(spark, root, next)
-      next
+      publishTombstoneLocked(spark, root, staged)
     }
+
+  /** The publish half of every deletion-vector DELETE, run with the
+    * table claim held and orphans recovered.
+    */
+  private[sources] def publishTombstoneLocked(spark: SparkSession, root: String,
+                                              staged: StagedDelete): Long = {
+    val rootPath = new Path(root.replaceAll("/+$", ""))
+    val f = fs(spark, rootPath)
+    val stagingPath = new Path(rootPath, staged.stagingDir)
+    val abort = abortStaged(spark, root, "deletion-vector", Seq(staged.stagingDir)) _
+    val head = currentVersion(spark, root).getOrElse(
+      abort("table has no committed version"))
+    val next = head + 1L
+    if (!f.exists(stagingPath))
+      abort("staging dir missing (vacuumed or already published)")
+    validateDisjointRebase(spark, root, staged.base, head,
+      staged.stagingDir, abort)
+    if (!f.rename(stagingPath, new Path(rootPath, tombDirName(next))))
+      throw new IllegalStateException(
+        s"could not move staged $stagingPath into ${tombDirName(next)}")
+    // the data-file set is untouched by this commit: the HEAD's
+    // sidecar carries verbatim (stats prune files; the vector prunes
+    // rows afterwards), the head's dirs and vectors carry, ours appends
+    // to the vector list
+    val carry = sidecarCarry(spark, root, head)
+    val stack = writeStats(spark, root, next, Nil, carry)
+    writeManifestDirs(spark, root, next, dirsOf(spark, root, head),
+      batchId = batchIdOf(spark, root, head).getOrElse(-1L),
+      tombDirs = tombDirsOf(spark, root, head) :+ tombDirName(next),
+      kind = "delete",
+      partCol = partColOf(spark, root, head).getOrElse(""),
+      morKeys = morKeysOf(spark, root, head),
+      schemaJson = rawSchemaJson(spark, root, head),
+      statsStack = stack)
+    publishLatest(spark, root, next)
+    next
   }
 
   /** [[tombstoneDelete]] without holding the claim across the scan:
@@ -1098,11 +1067,16 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     */
   private[graft] case class StagedUpdate(base: Long, tombStaging: String,
                                          dataStaging: String,
-                                         touchedRels: Set[String],
                                          noMatch: Boolean,
                                          obs: Option[org.apache.spark.sql.Observation] = None,
                                          constraintsFp: String = "")
 
+  /** The stage half of every merge-on-read UPDATE ([[updateWhere]]'s
+    * contract): positions AND payload come from one pruned scan, the
+    * matched positions write a staged deletion vector and the
+    * rewritten rows a staged data dir. A predicate matching nothing
+    * stages nothing (`noMatch`).
+    */
   def stageUpdateWhereOcc(spark: SparkSession, root: String,
       mkCond: DataFrame => org.apache.spark.sql.Column,
       mkAssign: DataFrame => Map[String, org.apache.spark.sql.Column])
@@ -1115,18 +1089,25 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     require(partColOf(spark, root, cur).isEmpty,
       "updateWhere: partition-scoped lineage — update via upsertScoped")
     val rootPath = new Path(root.replaceAll("/+$", ""))
+    // file-manifest scan: schema declared, zero listing when the
+    // sidecar is complete (prunedBaseScan); raw positions, no DV/MoR.
+    // Row-tracked lineages read WITH the materialized id column so
+    // the rewritten rows keep their identities (round 12)
     val tracked = rowTrackingEnabled(spark, root)
     val base = prunedBaseScan(spark, root, cur, withRid = tracked)
     val assignments = mkAssign(base)
     require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
     require(assignments.keys.forall(base.columns.contains),
       s"SET columns ${assignments.keys} must be columns of the table")
+    // rows already hidden by a deletion vector must not match (they
+    // would resurrect as updated copies), so the current vectors apply
+    // first
     val alive = DeletionVectors.liveRows(spark, root,
       tombDirsOf(spark, root, cur), base)
     val matched = alive.filter(mkCond(base)).persist()
     try {
       if (matched.isEmpty)
-        return StagedUpdate(cur, "", "", Set.empty, noMatch = true)
+        return StagedUpdate(cur, "", "", noMatch = true)
       val uid = java.util.UUID.randomUUID.toString.replace("-", "")
       val tombStaging = "tomb_u" + uid
       val dataStaging = "data_u" + uid
@@ -1136,7 +1117,8 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
           new Path(rootPath, tombStaging))
         val sel = base.columns.toSeq
           .map(c => assignments.get(c).map(_.as(c)).getOrElse(col(c)))
-        // row tracking: exact identities for the rewritten copies
+        // row tracking: the rewritten copies carry EXACT identities —
+        // the file-materialized id when present, else base + index
         val matchedSrc =
           if (!tracked) matched
           else {
@@ -1154,73 +1136,78 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         // inside the staged write, table unmoved; DROP removes the
         // violating rewrite, whose old copy the tombstone already hides
         // — the Delta UPDATE contract: constraints verify written rows)
-        // Round 12: unassigned generated columns recompute first
+        // Round 12: generated columns the SET did not explicitly assign
+        // recompute first (source changes refresh derivations
+        // transparently)
         val (rewrites, obs) = Constraints.gate(spark, root,
           Generated.recompute(spark, root, matchedSrc.select(sel: _*),
             assignments.keys.toSet))
+        // the rewrites dir joins a physical-named lineage — translate
         schemaOf(spark, root, cur).map(toPhysicalDf(rewrites, _))
           .getOrElse(rewrites).write.mode("overwrite")
           .parquet(new Path(rootPath, dataStaging).toString)
-        val touched = DeletionVectors.read(spark, root, Seq(tombStaging))
-          .select("__rel").distinct().collect().map(_.getString(0)).toSet
-        StagedUpdate(cur, tombStaging, dataStaging, touched, noMatch = false,
+        StagedUpdate(cur, tombStaging, dataStaging, noMatch = false,
           obs = obs, constraintsFp = gateFp)
       } catch { case e: Throwable =>
-        val f = fs(spark, rootPath)
-        f.delete(new Path(rootPath, tombStaging), true)
-        f.delete(new Path(rootPath, dataStaging), true)
+        Seq(tombStaging, dataStaging)
+          .foreach(d => fs(spark, rootPath).delete(new Path(rootPath, d), true))
         throw e
       }
     } finally matched.unpersist()
   }
 
+  /** Publish a staged UPDATE under a bounded-wait claim, rebasing as
+    * [[publishTombstoneOcc]] does.
+    */
   def publishUpdateOcc(spark: SparkSession, root: String,
-                       staged: StagedUpdate): Long = {
+                       staged: StagedUpdate): Long =
     withClaimWait(spark, root) {
-      val rootPath = new Path(root.replaceAll("/+$", ""))
-      val f = fs(spark, rootPath)
-      def abort(why: String): Nothing = {
-        if (staged.tombStaging.nonEmpty)
-          f.delete(new Path(rootPath, staged.tombStaging), true)
-        if (staged.dataStaging.nonEmpty)
-          f.delete(new Path(rootPath, staged.dataStaging), true)
-        throw new java.util.ConcurrentModificationException(
-          s"merge-on-read UPDATE OCC commit aborted: $why — re-run " +
-          "against the new head")
-      }
       recoverOrphans(spark, root)
-      val head = currentVersion(spark, root).getOrElse(
-        abort("table has no committed version"))
-      if (staged.noMatch) return head // version-preserving no-op
-      // stale-gate guard: constraints added mid-stage abort (round 11)
-      if (Constraints.fingerprint(spark, root) != staged.constraintsFp)
-        abort("table constraints changed while the update was staging")
-      val next = head + 1L
-      validateDisjointRebase(spark, root, staged.base, head,
-        staged.touchedRels, abort)
-      val tombSrc = new Path(rootPath, staged.tombStaging)
-      val dataSrc = new Path(rootPath, staged.dataStaging)
-      if (!f.exists(tombSrc) || !f.exists(dataSrc))
-        abort("staging dirs missing (vacuumed or already published)")
-      if (!f.rename(tombSrc, new Path(rootPath, tombDirName(next))))
-        throw new IllegalStateException(
-          s"could not move staged $tombSrc into ${tombDirName(next)}")
-      if (!f.rename(dataSrc, new Path(rootPath, dataDirName(next))))
-        throw new IllegalStateException(
-          s"could not move staged $dataSrc into ${dataDirName(next)}")
-      val carry = sidecarCarry(spark, root, head)
-      val stack = writeStats(spark, root, next, Nil, carry)
-      writeManifestDirs(spark, root, next,
-        dirsOf(spark, root, head) :+ dataDirName(next),
-        batchId = batchIdOf(spark, root, head).getOrElse(-1L),
-        tombDirs = tombDirsOf(spark, root, head) :+ tombDirName(next),
-        kind = "update",
-        schemaJson = rawSchemaJson(spark, root, head),
-        statsStack = stack)
-      publishLatest(spark, root, next)
-      Constraints.finish(spark, root, next, staged.obs)
-      next
+      publishUpdateLocked(spark, root, staged)
     }
+
+  /** The publish half of every merge-on-read UPDATE, run with the table
+    * claim held and orphans recovered. A `noMatch` stage is a
+    * version-preserving no-op: no empty dirs enter the manifest.
+    */
+  private[sources] def publishUpdateLocked(spark: SparkSession, root: String,
+                                           staged: StagedUpdate): Long = {
+    val rootPath = new Path(root.replaceAll("/+$", ""))
+    val f = fs(spark, rootPath)
+    val abort = abortStaged(spark, root, "merge-on-read UPDATE",
+      Seq(staged.tombStaging, staged.dataStaging)) _
+    val head = currentVersion(spark, root).getOrElse(
+      abort("table has no committed version"))
+    if (staged.noMatch) return head
+    // stale-gate guard: constraints added mid-stage abort (round 11)
+    if (Constraints.fingerprint(spark, root) != staged.constraintsFp)
+      abort("table constraints changed while the update was staging")
+    val next = head + 1L
+    val tombSrc = new Path(rootPath, staged.tombStaging)
+    val dataSrc = new Path(rootPath, staged.dataStaging)
+    if (!f.exists(tombSrc) || !f.exists(dataSrc))
+      abort("staging dirs missing (vacuumed or already published)")
+    validateDisjointRebase(spark, root, staged.base, head,
+      staged.tombStaging, abort)
+    Seq(tombSrc -> tombDirName(next), dataSrc -> dataDirName(next)).foreach {
+      case (src, dst) => if (!f.rename(src, new Path(rootPath, dst)))
+        throw new IllegalStateException(s"could not move staged $src into $dst")
+    }
+    // pre-existing files are untouched → the head's sidecar lines carry
+    // verbatim; the appended dir gets no stats line (same contract as
+    // an un-statted append — skipping stays safe, not stale)
+    val carry = sidecarCarry(spark, root, head)
+    val stack = writeStats(spark, root, next, Nil, carry)
+    writeManifestDirs(spark, root, next,
+      dirsOf(spark, root, head) :+ dataDirName(next),
+      batchId = batchIdOf(spark, root, head).getOrElse(-1L),
+      tombDirs = tombDirsOf(spark, root, head) :+ tombDirName(next),
+      kind = "update",
+      schemaJson = rawSchemaJson(spark, root, head),
+      statsStack = stack)
+    publishLatest(spark, root, next)
+    Constraints.finish(spark, root, next, staged.obs)
+    next
   }
 
   /** [[updateWhere]] through the OCC split: scan + both staged writes
@@ -1260,94 +1247,22 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
   def updateWhere(spark: SparkSession, root: String,
                   mkCond: DataFrame => org.apache.spark.sql.Column,
                   assignments: Map[String, org.apache.spark.sql.Column]): Long =
-    updateWhere(spark, root, mkCond,
-      (_: DataFrame) => assignments)
+    updateWhere(spark, root, mkCond, (_: DataFrame) => assignments)
 
   /** [[updateWhere]] with assignments built against the positional base
     * scan (like `mkCond`) — what the SQL lowering needs to re-bind
-    * resolved `SET` expressions by name.
+    * resolved `SET` expressions by name. One body with
+    * [[updateWhereOcc]]: the same stage and publish, run with the
+    * fail-fast table claim held across both.
     */
   def updateWhere(spark: SparkSession, root: String,
                   mkCond: DataFrame => org.apache.spark.sql.Column,
-                  mkAssign: DataFrame => Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.col
-    withClaim(spark, root) { f =>
+                  mkAssign: DataFrame => Map[String, org.apache.spark.sql.Column]): Long =
+    withClaim(spark, root) { _ =>
       recoverOrphans(spark, root)
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed version at $root"))
-      require(morKeysOf(spark, root, cur).isEmpty,
-        "updateWhere: merge-on-read keyed lineage — update by key via upsertMor")
-      require(partColOf(spark, root, cur).isEmpty,
-        "updateWhere: partition-scoped lineage — update via upsertScoped")
-      val next = cur + 1L
-      val rootPath = new Path(root.replaceAll("/+$", ""))
-      // file-manifest scan: schema declared, zero listing when the
-      // sidecar is complete (prunedBaseScan); raw positions, no DV/MoR.
-      // Row-tracked lineages read WITH the materialized id column so
-      // the rewritten rows keep their identities (round 12)
-      val tracked = rowTrackingEnabled(spark, root)
-      val base = prunedBaseScan(spark, root, cur, withRid = tracked)
-      val assignments = mkAssign(base)
-      require(assignments.nonEmpty, "updateWhere needs at least one SET assignment")
-      require(assignments.keys.forall(base.columns.contains),
-        s"SET columns ${assignments.keys} must be columns of the table")
-      // positions AND payload in one pruned scan; rows already hidden by
-      // a deletion vector must not match (they would resurrect as
-      // updated copies), so the current vectors apply first
-      val tombs = tombDirsOf(spark, root, cur)
-      val alive = DeletionVectors.liveRows(spark, root, tombs, base)
-      val matched = alive.filter(mkCond(base)).persist()
-      try {
-        if (matched.isEmpty) cur
-        else {
-          writeTombstones(spark, matched.select(col("__rel"), col("__ri")),
-            new Path(rootPath, tombDirName(next)))
-          val sel = base.columns.toSeq
-            .map(c => assignments.get(c).map(_.as(c)).getOrElse(col(c)))
-          // row tracking: the rewritten copies carry EXACT identities —
-          // the file-materialized id when present, else base + index
-          val matchedSrc =
-            if (!tracked) matched
-            else {
-              import org.apache.spark.sql.functions.{coalesce, lit,
-                raise_error, when}
-              val ridc = coalesce(col(RowIdCol), col("__rbase") + col("__ri"))
-              matched.join(rowBaseDf(spark, root, cur), Seq("__rel"), "left")
-                .withColumn(RowIdCol, when(ridc.isNull, raise_error(lit(
-                  s"row-id coverage incomplete at $root — run " +
-                  "enableRowTracking to re-base"))).otherwise(ridc))
-            }
-          // round 11 (ADVICE): rewritten rows gate through declared
-          // CHECK constraints — same contract as stageUpdateWhereOcc.
-          // Round 12: generated columns the SET did not explicitly
-          // assign recompute first (the Delta UPDATE contract — source
-          // changes refresh derivations transparently)
-          val (rewrites, obs) = Constraints.gate(spark, root,
-            Generated.recompute(spark, root, matchedSrc.select(sel: _*),
-              assignments.keys.toSet))
-          // the rewrites dir joins a physical-named lineage — translate
-          schemaOf(spark, root, cur).map(toPhysicalDf(rewrites, _))
-            .getOrElse(rewrites).write.mode("overwrite")
-            .parquet(new Path(rootPath, dataDirName(next)).toString)
-          // pre-existing files are untouched → parent sidecar lines carry
-          // verbatim; the appended dir gets no stats line (same contract
-          // as an un-statted append — skipping stays safe, not stale)
-          val carry = sidecarCarry(spark, root, cur)
-          val stack = writeStats(spark, root, next, Nil, carry)
-          writeManifestDirs(spark, root, next,
-            dirsOf(spark, root, cur) :+ dataDirName(next),
-            batchId = batchIdOf(spark, root, cur).getOrElse(-1L),
-            tombDirs = tombs :+ tombDirName(next),
-            kind = "update",
-            schemaJson = rawSchemaJson(spark, root, cur),
-            statsStack = stack)
-          publishLatest(spark, root, next)
-          Constraints.finish(spark, root, next, obs)
-          next
-        }
-      } finally matched.unpersist()
+      publishUpdateLocked(spark, root,
+        stageUpdateWhereOcc(spark, root, mkCond, mkAssign))
     }
-  }
 
   /** Selective OVERWRITE — Delta's `replaceWhere` as ONE atomic
     * merge-on-read version: (a) tombstone every current row matching
@@ -1910,19 +1825,9 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     // mid-stage abort instead of admitting ungated rows)
     val gateFp = Constraints.fingerprint(spark, root)
     val (gated, obs) = Constraints.gate(spark, root, batch)
-    // column mapping, same translation as the claimed path (round 11)
-    val stagePin = currentVersion(spark, root).flatMap(schemaOf(spark, root, _))
-    def toLogical(df: DataFrame): DataFrame =
-      stagePin.map(fromPhysicalSelect(df, _)).getOrElse(df)
-    def toPhys(df: DataFrame): DataFrame =
-      stagePin.map(toPhysicalDf(df, _)).getOrElse(df)
-    // declared-schema slice read: widened narrow leafs upcast (see the
-    // claimed path's readSlice)
-    def readSlice(paths: Seq[String]): DataFrame = stagePin match {
-      case Some(st) => spark.read.schema(physicalSchema(st)).parquet(paths: _*)
-      case None     => spark.read.parquet(paths: _*)
-    }
-    val physMap = stagePin.map(renameMap).getOrElse(Map.empty[String, String])
+    val pinned = new ScopedPin(spark,
+      currentVersion(spark, root).flatMap(schemaOf(spark, root, _)))
+    import pinned._
     // zone pinning, same rule as the claimed path (the publish-side
     // disjointness check then compares identically-rendered names)
     val spec = normalizeGpSpec(spark, spec0, batch,
@@ -1935,7 +1840,6 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         GpPrefix + ExternalCatalogUtils.escapePathName(r.getString(0))
       }.toSet
     val base = currentVersion(spark, root)
-    def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
     // spec evolution (round 13): the lock-free stage derives its merge
     // slice purely from head-spec leaf names — an old-spec leaf the
     // batch's keys live in would silently duplicate. Refuse while any
@@ -1965,7 +1869,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       if (!trackedOcc) None
       else {
         val parentDirs = dirsOf(spark, root, b)
-        val replaced = parentDirs.filter(d => touchedNames.contains(baseName(d)))
+        val replaced = parentDirs.filter(d => touchedNames.contains(entryName(d)))
         if (replaced.isEmpty) None
         else Some(scanWithRids(spark, root, b,
           replaced.map(d => new Path(rootPath, d).toString),
@@ -1974,10 +1878,10 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
     }
     val parentSlice: Option[DataFrame] = base.flatMap { b =>
       val parentDirs = dirsOf(spark, root, b)
-      require(parentDirs.forall(baseName(_).startsWith(GpPrefix)),
+      require(parentDirs.forall(entryName(_).startsWith(GpPrefix)),
         "upsertScopedOcc needs a scoped table — run upsertScoped once " +
         "to migrate a plain table into the scoped layout")
-      val replaced = parentDirs.filter(d => touchedNames.contains(baseName(d)))
+      val replaced = parentDirs.filter(d => touchedNames.contains(entryName(d)))
       if (replaced.isEmpty) None
       else parentSliceAll.map(_.drop(RowIdCol)).orElse(
         Some(toLogical(applyTombstoneDirs(spark, root,
@@ -2062,15 +1966,10 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
                                                statsCols: Seq[String],
                                                batchId: Long = -1L): Long = {
     val rootPath = new Path(root.replaceAll("/+$", ""))
-    def baseName(d: String) = d.substring(d.lastIndexOf('/') + 1)
     locally {
       val f = fs(spark, rootPath)
       val stagingPath = new Path(rootPath, staged.stagingDir)
-      def abort(why: String): Nothing = {
-        f.delete(stagingPath, true)
-        throw new java.util.ConcurrentModificationException(
-          s"scoped OCC commit aborted: $why — re-run against the new head")
-      }
+      val abort = abortStaged(spark, root, "scoped", Seq(staged.stagingDir)) _
       // constraints added while the stage was in flight invalidate the
       // staged (stale-gated) rows — abort, caller re-runs and re-gates
       if (Constraints.fingerprint(spark, root) != staged.constraintsFp)
@@ -2086,15 +1985,15 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
         if (manifestKind(spark, root, c) != Some("scoped"))
           abort(s"non-scoped commit v$c landed since the staged base")
         val ownLeafs = dirsOf(spark, root, c)
-          .filter(_.startsWith(dataDirName(c) + "/")).map(baseName).toSet
+          .filter(_.startsWith(dataDirName(c) + "/")).map(entryName).toSet
         val overlap = ownLeafs.intersect(staged.touched)
         if (overlap.nonEmpty)
           abort(s"v$c touched the same partitions: ${overlap.mkString(", ")}")
       }
       val headDirs = head.map(dirsOf(spark, root, _)).getOrElse(Seq.empty)
-      if (head.nonEmpty && !headDirs.forall(baseName(_).startsWith(GpPrefix)))
+      if (head.nonEmpty && !headDirs.forall(entryName(_).startsWith(GpPrefix)))
         abort("head is not a scoped table")
-      val untouched = headDirs.filterNot(d => staged.touched.contains(baseName(d)))
+      val untouched = headDirs.filterNot(d => staged.touched.contains(entryName(d)))
       val writtenLeafs = f.listStatus(stagingPath).map(_.getPath.getName)
         .filter(_.startsWith(GpPrefix)).sorted.toSeq
       if (head.nonEmpty && writtenLeafs.toSet != staged.touched)
@@ -2103,7 +2002,7 @@ private[sources] trait SnapshotLogScoped { self: SnapshotLog.type =>
       if (!f.rename(stagingPath, dataDir(root, next)))
         throw new IllegalStateException(
           s"could not move staged $stagingPath into ${dataDir(root, next)}")
-      val untouchedBase = untouched.map(baseName).toSet
+      val untouchedBase = untouched.map(entryName).toSet
       val carry = head.map(c =>
         sidecarCarry(spark, root, c).filter { line =>
           val key = StatsEval.unesc(line.split("\t", -1)(0))

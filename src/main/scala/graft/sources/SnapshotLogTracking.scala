@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.DeletionVectors.relKey
+
 /** Row tracking + CDC + stats sidecar storage (part 4/5): stable row
   * identities, file-granular changesByRowId/changesBetween, the
   * change feed and consumer cursors, footer-derived skipping stats,
@@ -83,7 +85,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
     spark.sparkContext.parallelize(paths, slices).map { pstr =>
       import scala.jdk.CollectionConverters._
       val p = new Path(pstr)
-      val rel = p.getParent.getName + "/" + p.getName
+      val rel = relKey(p)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf.value))
       try (rel, reader.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum)
@@ -137,7 +139,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       val allFiles: Seq[String] = filesFromSidecar(spark, root, cur) match {
         case Some(sts) => sts.map(_.getPath.toString)
         case None => dirsOf(spark, root, cur).flatMap { d =>
-          if (d.contains('/') && d.endsWith(".parquet"))
+          if (isFileEntry(d))
             Seq(new Path(rootPath, d).toString)
           else {
             val it = f.listFiles(new Path(rootPath, d), true)
@@ -150,9 +152,6 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
             b.result()
           }
         }
-      }
-      def relOf(p: String) = {
-        val pp = new Path(p); pp.getParent.getName + "/" + pp.getName
       }
       val covered: Map[String, (Long, Long)] = sidecarCarry(spark, root, cur)
         .filter(l => l.split("\t", -1) match {
@@ -172,7 +171,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
           StatsEval.unesc(p(0)) -> (p(3).toLong, p(4).toLong)
         }.toMap
       }
-      val uncovered = allFiles.filterNot(p => covered.contains(relOf(p)))
+      val uncovered = allFiles.filterNot(p => covered.contains(relKey(new Path(p))))
       if (rowTrackingEnabled(spark, root) && uncovered.isEmpty)
         return cur // enabled and fully covered — nothing to do
       // fresh bases start past BOTH the recorded mark and every carried
@@ -325,8 +324,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
                                        keys: Seq[String]): Option[Set[String]] = {
     import org.apache.spark.sql.functions.{col, max => smax, min => smin, when}
     val all = filesFromSidecar(spark, root, v).getOrElse(return None)
-    def relOf(p: Path): String = p.getParent.getName + "/" + p.getName
-    val allRel = all.map(st => relOf(st.getPath)).toSet
+    val allRel = all.map(st => relKey(st.getPath)).toSet
     val MaxPoint = 16
     // hoisted once per probe: the deriver map costs declaration +
     // manifest + SPECHIST reads, and point probes fan out per value
@@ -338,13 +336,13 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       else if (vals.contains(null)) allRel
       else if (vals.size <= MaxPoint)
         vals.map(x => candidateFilesEquals(spark, root, v, k, x, derivers = dv)
-          ._1.map(relOf).toSet).reduce(_ union _)
+          ._1.map(relKey(_)).toSet).reduce(_ union _)
       else {
         val r = probe.agg(smin(col(k)), smax(col(k)),
           smax(when(col(k).isNull, 1).otherwise(0))).head
         if (r.get(2) == 1) allRel
         else candidateFiles(spark, root, v, k, r.get(0), r.get(1))
-          ._1.map(relOf).toSet
+          ._1.map(relKey(_)).toSet
       }
     }
     Some(sets.reduce(_ intersect _))
@@ -679,7 +677,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       case None =>
         val f = fs(spark, rootPath)
         dirsOf(spark, root, v).flatMap { d =>
-          if (d.contains('/') && d.endsWith(".parquet"))
+          if (isFileEntry(d))
             Seq(new Path(rootPath, d))
           else {
             val it = f.listFiles(new Path(rootPath, d), true)
@@ -693,7 +691,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
           }
         }
     }
-    paths.map(p => (p.getParent.getName + "/" + p.getName) -> p.toString).toMap
+    paths.map(p => relKey(p) -> p.toString).toMap
   }
 
   /** [[scanWithRids]] renamed to the public `_row_id`, or a same-shaped
@@ -875,10 +873,10 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
           // through its DIR part: tombstone rels name dir/file, and the
           // dir of a partially-carried file is reachable only via the
           // entry's prefix (duplicates collapse to the same mapping)
-          if (d.contains('/') && d.endsWith(".parquet")) {
+          if (isFileEntry(d)) {
             val dp = d.substring(0, d.lastIndexOf('/'))
-            dp.substring(dp.lastIndexOf('/') + 1) -> dp
-          } else d.substring(d.lastIndexOf('/') + 1) -> d
+            entryName(dp) -> dp
+          } else entryName(d) -> d
         }.toMap
         val files = rels.toSeq.flatMap { rel =>
           val cut = rel.indexOf('/')
@@ -1381,7 +1379,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       }.toSet
       val fresh = ownFiles.result().map(_.toString).filterNot { p =>
         val pp = new Path(p)
-        preAssigned.contains(pp.getParent.getName + "/" + pp.getName)
+        preAssigned.contains(relKey(pp))
       }
       val counts = fileRowCounts(spark, fresh)
       if (counts.nonEmpty) {
@@ -1598,7 +1596,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
     val p = new Path(pathStr)
     // sidecar keys are dir-relative paths: append chains hold files from
     // several data dirs whose bare part-file names can collide
-    val rel = p.getParent.getName + "/" + p.getName
+    val rel = relKey(p)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, cfg))
     try {
@@ -1841,7 +1839,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
         }
         .collect().toSet
       val kept = all.filter { p =>
-        val key = p.getParent.getName + "/" + p.getName
+        val key = relKey(p)
         if (pruned.contains(key)) false
         else bucketAdmits(p) && (dirSpanOf(p) match {
           case Some((tag, mn, mx)) =>
@@ -1872,7 +1870,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
         }
         .collect().toSet
       val kept = all.filter { p =>
-        val key = p.getParent.getName + "/" + p.getName
+        val key = relKey(p)
         if (pruned.contains(key)) false
         else bucketAdmits(p) && (dirSpanOf(p) match {
           case Some((tag, mn, mx)) =>
@@ -1899,7 +1897,7 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
         }.toMap
       val kept = all.filter { p =>
         bucketAdmits(p) &&
-        (span.get(p.getParent.getName + "/" + p.getName)
+        (span.get(relKey(p))
           .orElse(dirSpanOf(p)) match {
           case Some((tag, mn, mx)) =>
             StatsEval.overlaps(tag, mn, mx, loS, hiS, loN, hiN)
@@ -1991,13 +1989,13 @@ private[sources] trait SnapshotLogTracking { self: SnapshotLog.type =>
       } else Map.empty
     val dt = tableSchema(spark, root, version).apply(column0).dataType
     val (haveSidecar, noSidecar) = rangeKept.partition(p =>
-      blooms.contains(p.getParent.getName + "/" + p.getName))
+      blooms.contains(relKey(p)))
     val keptSidecar = {
       if (haveSidecar.isEmpty) Seq.empty
       else {
         val pos = bloomPositions(value, dt)
         haveSidecar.filter(p =>
-          pos.forall(blooms(p.getParent.getName + "/" + p.getName).get))
+          pos.forall(blooms(relKey(p)).get))
       }
     }
     val keptFooter = probeFooterBlooms(spark, noSidecar, column, dt, value)

@@ -395,7 +395,7 @@ case class GraftUpdateShadowPlanCommand(table: GraftTable,
   }
 }
 
-/** DELETE WHERE → [[SnapshotLog.tombstoneDeleteWhere]]: the predicate
+/** DELETE WHERE → [[SnapshotLog.tombstoneDeleteWhereOcc]]: the predicate
   * is re-bound by name onto the positional scan and the matching (file,
   * row) positions land in an O(deleted rows) deletion-vector sidecar —
   * zero data files rewritten.
@@ -421,7 +421,7 @@ case class GraftDeleteCommand(table: GraftTable,
   }
 }
 
-/** UPDATE WHERE on an unpartitioned table → [[SnapshotLog.updateWhere]]:
+/** UPDATE WHERE on an unpartitioned table → [[SnapshotLog.updateWhereOcc]]:
   * ONE merge-on-read version that tombstones the matched positions
   * (deletion vector) and appends the rewritten matched rows — write
   * cost O(matched rows), zero pre-existing files rewritten. Predicate

@@ -30,14 +30,15 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *     capability-less table) into [[GraftCommands]] runnable commands
   *     over the snapshot-log write paths:
   *       - INSERT INTO            → appendCommit        (O(batch))
-  *       - DELETE WHERE p         → tombstoneDeleteWhere (O(deleted rows),
-  *                                  deletion vectors — zero file rewrites)
+  *       - DELETE WHERE p         → tombstoneDeleteWhereOcc (O(deleted
+  *                                  rows), deletion vectors — zero file
+  *                                  rewrites)
   *       - classic upsert MERGE   → upsertScoped        (O(touched
   *                                  partitions), when the table declared
   *                                  PARTITIONED BY and the merge is the
   *                                  update-all/insert-all-by-key shape)
   *       - UPDATE WHERE p (flat table, no subqueries)
-  *                                → updateWhere          (O(matched rows),
+  *                                → updateWhereOcc       (O(matched rows),
   *                                  merge-on-read: deletion vector over
   *                                  the old copies + appended rewrites)
   *       - general MERGE / other UPDATE → full-snapshot rewrite commit (the

@@ -24,6 +24,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{DeletionVectors, SnapshotLog}
+import graft.sources.DeletionVectors.relKey
+import graft.sources.SnapshotLog.{entryName, isFileEntry}
 
 /** Structured-Streaming TAIL of a snapshot-log table — the "stream a
   * lakehouse table" verb (Delta's streaming source shape):
@@ -147,17 +149,15 @@ private[streaming] class GraftTailTable(root: String, schema: StructType)
   * entries are whole DIRS ("data_vNNN", absolute clone dirs) or FILE
   * entries ("…/file.parquet" — the pruned upsert's partial carries and
   * a converted table's adopted files). Dir entries match a status by
-  * parent dir name; file entries by the (dir, name) pair — the same
-  * keying every sidecar mechanism uses.
+  * parent dir name; file entries by the (dir, name) pair
+  * ([[DeletionVectors.relKey]]) — the same keying every sidecar
+  * mechanism uses.
   */
 private[streaming] object EntryPaths {
-  def isFileEntry(d: String): Boolean =
-    d.contains('/') && d.endsWith(".parquet")
-  def relKey(p: Path): String = p.getParent.getName + "/" + p.getName
   def filterStatuses(entries: Seq[String],
                      sts: Seq[org.apache.hadoop.fs.FileStatus]): Seq[String] = {
     val (fileEnts, dirEnts) = entries.partition(isFileEntry)
-    val dirSet = dirEnts.map(d => d.substring(d.lastIndexOf('/') + 1)).toSet
+    val dirSet = dirEnts.map(entryName).toSet
     val fileSet = fileEnts.map(d => relKey(new Path(d))).toSet
     sts.filter { st =>
       dirSet.contains(st.getPath.getParent.getName) ||
@@ -484,7 +484,7 @@ private[streaming] class GraftTailStream(root: String, schema: StructType,
     })
     files.map { f =>
       val pp = new Path(f)
-      val rel = pp.getParent.getName + "/" + pp.getName
+      val rel = relKey(pp)
       excludeRelFiles.get(rel) match {
         case Some(tfs) => GraftFilePartition(f, readJson,
           tombFiles = tfs, relKey = rel, exclude = true): InputPartition
